@@ -47,7 +47,7 @@ from sparkdon.errors import QueryExecutionError
 from sparkdon.operators.dictionary import term_id
 from sparkdon.terms import (
     XSD, BNode, IRI, KIND_BNODE, KIND_IRI, KIND_LIT, Literal, NUMERIC_DATATYPES,
-    iri_term, lit_term, make_term, numeric_value, sort_key,
+    iri_term, lit_term, make_term, named_or_empty, numeric_value, sort_key,
 )
 
 
@@ -1131,11 +1131,7 @@ class Compiler:
           (graph-per-document layouts at 100 TB make driver-side graph
           iteration a non-starter).
         """
-        from sparkdon.terms import QUAD_SCHEMA
-
-        named = self.named
-        if named is None:
-            named = self.spark.createDataFrame([], QUAD_SCHEMA)
+        named = named_or_empty(self.spark, self.named)
         saved_triples, saved_var = self.triples, self.graph_var
         try:
             if isinstance(el.term, Var):

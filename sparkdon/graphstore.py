@@ -23,9 +23,12 @@ is a syntactic subset of Turtle; one parser covers both).  Graph
 identification is *indirect* (§4.1): a request naming neither
 ``default`` nor ``graph=`` answers 400.
 
-Every mutation swaps an immutable ``localCheckpoint`` snapshot — the
-same discipline as the SPARQL-update path (session.py
-``_apply_update``), so concurrent readers keep their consistent frame.
+This module only speaks HTTP: it parses requests and payloads and maps
+outcomes to status codes.  Each write is one call to
+:meth:`~sparkdon.session.LocalEndpoint.write_graph`, which commits
+through the endpoint's single write path — the lock and snapshot swap
+that SPARQL updates use too — so a PUT and a concurrent SPARQL
+``INSERT DATA`` both land, and GETs read a whole snapshot lock-free.
 """
 
 from __future__ import annotations
@@ -34,10 +37,8 @@ import threading
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from pyspark.sql import functions as F
-
 from sparkdon import io as io_mod
-from sparkdon.terms import QUAD_SCHEMA
+from sparkdon.protocol import GRAPH_TYPES, negotiate
 
 #: payload media types accepted for PUT/POST bodies
 _PARSE_TYPES = ("text/turtle", "application/n-triples", "text/plain",
@@ -90,8 +91,6 @@ class GraphStoreServer:
         self.server = ThreadingHTTPServer((host, port), Handler)
         self.server.daemon_threads = True
         self._thread: threading.Thread | None = None
-        #: mutations serialize (reads stay lock-free on the snapshots)
-        self._write_lock = threading.Lock()
 
     # -- lifecycle ------------------------------------------------------
 
@@ -131,16 +130,6 @@ class GraphStoreServer:
         if body and h.command != "HEAD":
             h.wfile.write(body)
 
-    def _named_slice(self, iri: str):
-        named = self.endpoint.named
-        if named is None:
-            return None
-        return named.filter(F.col("g") == iri).drop("g")
-
-    def _graph_exists(self, iri: str) -> bool:
-        sl = self._named_slice(iri)
-        return sl is not None and not sl.isEmpty()
-
     def _parse_body(self, h: BaseHTTPRequestHandler,
                     base: str | None = None):
         """Request body → triple rows (relative IRIs resolve against
@@ -165,24 +154,6 @@ class GraphStoreServer:
         except Exception as e:
             raise _HttpError(400, f"payload parse error: {e}")
 
-    def _swap_named(self, iri: str, rows, replace: bool) -> None:
-        """Replace or merge one named graph.  The complete new quad
-        frame is built first and assigned ONCE: GETs read ep.named
-        without the write lock, so a two-step swap would expose a
-        deleted-but-not-yet-reinserted intermediate state to them —
-        old-or-new, never in-between."""
-        ep = self.endpoint
-        named = ep.named
-        if named is None:
-            named = ep.spark.createDataFrame([], QUAD_SCHEMA)
-        if replace:
-            named = named.filter(F.col("g") != iri)
-        if rows:
-            add = (io_mod.triples_df(ep.spark, rows)
-                   .withColumn("g", F.lit(iri)))
-            named = named.unionByName(add).dropDuplicates()
-        ep.named = named.localCheckpoint(eager=True)
-
     # -- request handling -------------------------------------------------
 
     def _handle(self, h: BaseHTTPRequestHandler, method: str,
@@ -197,21 +168,16 @@ class GraphStoreServer:
         iri = None if is_default else graph_iris[0]
 
         if method in ("GET", "HEAD"):
-            from sparkdon.protocol import negotiate_graph_type
-
-            out_type = negotiate_graph_type(h.headers.get("Accept"))
+            out_type = negotiate(h.headers.get("Accept"), GRAPH_TYPES)
             if out_type is None:
                 self._plain(h, 406, "graphs are produced as "
                             "application/n-triples, text/turtle, or "
                             "application/rdf+xml")
                 return
-            if iri is None:
-                df = ep.graph
-            else:
-                df = self._named_slice(iri)
-                if df is None or df.isEmpty():
-                    self._plain(h, 404, f"no such graph <{iri}>")
-                    return
+            df = ep.graph if iri is None else ep.named_graph(iri)
+            if iri is not None and df.isEmpty():
+                self._plain(h, 404, f"no such graph <{iri}>")
+                return
             prefixes = getattr(ep, "prefixes", None) or {}
             if out_type == "text/turtle":
                 body = io_mod.ttl_string(df, prefixes).encode()
@@ -230,17 +196,11 @@ class GraphStoreServer:
             return
 
         if method == "DELETE":
-            with self._write_lock:
-                if iri is None:
-                    # the default graph always exists; DELETE empties it
-                    ep.graph = ep.graph.limit(0).localCheckpoint(eager=True)
-                else:
-                    if not self._graph_exists(iri):
-                        self._plain(h, 404, f"no such graph <{iri}>")
-                        return
-                    ep.named = (ep.named.filter(F.col("g") != iri)
-                                .localCheckpoint(eager=True))
-            self._plain(h, 204)
+            # the default graph always exists; DELETE empties it
+            if ep.write_graph(iri, None, replace=True):
+                self._plain(h, 204)
+            else:
+                self._plain(h, 404, f"no such graph <{iri}>")
             return
 
         if method in ("PUT", "POST"):
@@ -249,18 +209,9 @@ class GraphStoreServer:
             except _HttpError as e:
                 self._plain(h, e.code, e.msg)
                 return
-            replace = method == "PUT"
-            with self._write_lock:
-                if iri is None:
-                    new = io_mod.triples_df(ep.spark, rows)
-                    if not replace:
-                        new = ep.graph.unionByName(new).dropDuplicates()
-                    ep.graph = new.localCheckpoint(eager=True)
-                    self._plain(h, 204)
-                else:
-                    existed = self._graph_exists(iri)
-                    self._swap_named(iri, rows, replace=replace)
-                    self._plain(h, 204 if existed else 201)
+            existed = ep.write_graph(iri, io_mod.triples_df(ep.spark, rows),
+                                     replace=method == "PUT")
+            self._plain(h, 204 if existed else 201)
             return
 
         self._plain(h, 405, f"method {method} not supported",

@@ -46,6 +46,8 @@ from typing import Dict
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sparkdon.sizing import spread_narrow_scan  # noqa: F401 — re-exported
+
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: Dict[str, str] = {}
 
@@ -121,24 +123,6 @@ def binary_logloss(p, y):
     return -(y * F.log(F.greatest(p, F.lit(1e-12)))
              + (F.lit(1.0) - y) * F.log(F.greatest(F.lit(1.0) - p,
                                                    F.lit(1e-12))))
-
-
-def spread_narrow_scan(docs: DataFrame) -> DataFrame:
-    """Spread a too-narrow batch scan before heavy narrow per-row work.
-
-    A zero-shuffle plan inherits the SCAN's partitioning, and a small
-    corpus arriving as one parquet file runs its whole narrow stage on
-    one core (gopher_repetition measured 8.0 → 3.2 s on the 5k
-    fixture).  Repartitions ONLY when the scan has fewer partitions
-    than the cluster — at corpus scale partitions >= cores and no
-    shuffle is added.  Streaming frames pass through untouched (.rdd
-    is illegal on them; micro-batch planning spreads those itself)."""
-    if docs.isStreaming:
-        return docs
-    p = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < p:
-        return docs.repartition(p)
-    return docs
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._registry import pin_shared, register, retired, table
+from ._registry import (pin_shared, register, retired, spread_narrow_scan,
+                        table)
 from .dedup import MINHASH_BUCKET_CAP, _bucket_pairs
 
 
@@ -1330,8 +1331,6 @@ def x_decontam_embed(spark, sf_dir):
     # one row group at fixture scale = the entire fold stage on one
     # core.  Spread only the corpus side (the bench side is broadcast);
     # no-op once the scan has >= parallelism splits.
-    from ._registry import spread_narrow_scan
-
     corpus = spread_narrow_scan(
         e.filter(F.col("vec_id") % DECONTAM_BENCH_MOD != 0))
     return decontam_semantic(corpus, bench)

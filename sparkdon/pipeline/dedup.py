@@ -389,8 +389,6 @@ def x_dedup_simhash(spark, sf_dir):
     scan's partitioning, so a one-file fixture would run it on one core:
     ``spread_narrow_scan`` guards that (measured 2.09 → 0.64 s at sf0.1,
     PERF.md r12 A/B; a no-op once scan partitions ≥ cores)."""
-    from ._registry import spread_narrow_scan
-
     def compute(batches):
         # r16 (guide §4.2 "do the heavy lifting in native code inside
         # the UDF"): md5 was already C (hashlib), but the 64-slot bit

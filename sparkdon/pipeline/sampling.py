@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._registry import pin_shared, register, table
+from ._registry import pin_shared, register, spread_narrow_scan, table
 
 
 @register(
@@ -648,7 +648,6 @@ def dsir_features(docs: DataFrame, buckets: int = 8192,
     simhash gate's md5 token hashes.  Bucketing quality is equivalent
     (both are uniform over the bucket space); xxhash64 stays the
     production default because it skips the hex round-trip."""
-    from ._registry import spread_narrow_scan
     from .text import nonempty_tokens, word_ngrams
 
     # measured 3.1 → 2.4 s on the one-partition 5k fixture

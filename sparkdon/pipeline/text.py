@@ -14,7 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._registry import pin_shared, register, retired, table
+from ._registry import (pin_shared, register, retired, spread_narrow_scan,
+                        table)
 from .dedup import CHUNK_TOKENS, _chunk_expr
 
 
@@ -1480,8 +1481,6 @@ def x_cms_heavy_hitters(spark, sf_dir):
     TakeOrdered top-k; the estimate join touches the constant-size
     sketch against 20×4 expanded probe rows.  Row-tagged hashes keep
     the 4 rows independent without any RNG."""
-    from ._registry import spread_narrow_scan
-
     # r16: spread the one-file scan so the token explode (and the
     # checkpoint materialization) runs on all cores, not one (guide
     # §2.5)
@@ -1806,8 +1805,6 @@ def gopher_repetition_signals(docs: DataFrame,
     (overlap-unaware, the same accounting the public reimplementations
     use), clamped to 1.0 — overlapping repeats of a templated scaffold
     can push the raw sum past the document's char count."""
-    from ._registry import spread_narrow_scan
-
     docs = spread_narrow_scan(docs)
     t = F.col(text_col)
 

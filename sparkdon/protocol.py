@@ -30,6 +30,7 @@ against one server are fine.
 
 from __future__ import annotations
 
+import collections
 import json
 import re
 import threading
@@ -79,10 +80,24 @@ def _struct_to_json(v) -> dict | None:
     return node
 
 
+def negotiate(accept: str | None, offered: dict[str, str]) -> str | None:
+    """Content negotiation for every response kind: the first media type
+    in the client's listed order that ``offered`` maps wins (minimal
+    negotiation, no q-value sorting); no Accept header means ``*/*``,
+    which each table maps to its default.  None = nothing acceptable
+    (406)."""
+    for part in (accept or "*/*").split(","):
+        got = offered.get(part.split(";", 1)[0].strip().lower())
+        if got is not None:
+            return got
+    return None
+
+
 #: graph serializations by Accept media type; wildcards resolve to
 #: N-Triples (the historical default).  Shared by the protocol server's
 #: CONSTRUCT/DESCRIBE results and the graph store's GET/HEAD.
-_GRAPH_TYPES = {
+GRAPH_TYPES = {
+    "*/*": "application/n-triples",
     "application/n-triples": "application/n-triples",
     "text/plain": "application/n-triples",
     "text/*": "application/n-triples",
@@ -92,21 +107,27 @@ _GRAPH_TYPES = {
     "application/xml": "application/rdf+xml",
 }
 
+#: the service description is produced as N-Triples only
+_NT_TYPES = {k: v for k, v in GRAPH_TYPES.items()
+             if v == "application/n-triples"}
 
-def negotiate_graph_type(accept: str | None) -> str | None:
-    """Pick a graph serialization: first acceptable media type in the
-    client's listed order (minimal negotiation, no q-value sorting);
-    no header or ``*/*`` → N-Triples; nothing acceptable → None."""
-    if not accept:
-        return "application/n-triples"
-    for part in accept.split(","):
-        mt = part.split(";", 1)[0].strip().lower()
-        if mt == "*/*":
-            return "application/n-triples"
-        got = _GRAPH_TYPES.get(mt)
-        if got is not None:
-            return got
-    return None
+#: SELECT/ASK serializations (SPARQL 1.1 Query Results JSON, XML and
+#: CSV/TSV formats); ``text/*`` resolves to CSV as the most
+#: interoperable text form
+_SELECT_TYPES = {
+    "*/*": "json",
+    "application/sparql-results+json": "json",
+    "application/json": "json",
+    "application/*": "json",
+    "application/sparql-results+xml": "xml",
+    "application/xml": "xml",
+    "text/csv": "csv",
+    "text/tab-separated-values": "tsv",
+    "text/*": "csv",
+}
+
+#: requests kept in :attr:`SparqlProtocolServer.queries` (oldest dropped)
+QUERY_LOG_SIZE = 1000
 
 
 class SparqlProtocolServer:
@@ -167,7 +188,9 @@ class SparqlProtocolServer:
 
         self.server = ThreadingHTTPServer((host, port), Handler)
         self.server.daemon_threads = True
-        self.queries: list[str] = []
+        #: the most recent query/update strings served, for inspection
+        self.queries: collections.deque[str] = collections.deque(
+            maxlen=QUERY_LOG_SIZE)
         self._thread: threading.Thread | None = None
 
     # -- lifecycle ------------------------------------------------------
@@ -207,58 +230,6 @@ class SparqlProtocolServer:
         h.end_headers()
         h.wfile.write(body)
 
-    @staticmethod
-    def _accepts(h: BaseHTTPRequestHandler, offered: tuple) -> bool:
-        """Minimal content negotiation: we produce exactly one
-        serialization per result kind; honor an Accept header that can
-        take it (or that wildcards), reject one that explicitly cannot."""
-        accept = h.headers.get("Accept")
-        if not accept:
-            return True
-        for part in accept.split(","):
-            mt = part.split(";", 1)[0].strip().lower()
-            if mt in offered or mt == "*/*":
-                return True
-        return False
-
-    #: acceptable Accept media types per result kind
-    _JSON_TYPES = ("application/sparql-results+json", "application/json",
-                   "application/*")
-    _NT_TYPES = ("application/n-triples", "text/plain", "text/*",
-                 "application/*")
-
-    #: SELECT/ASK serializations offered, by media type (SPARQL 1.1
-    #: Query Results JSON + CSV/TSV formats); ``text/*`` resolves to CSV
-    #: as the most interoperable text form
-    _SELECT_TYPES = {
-        "application/sparql-results+json": "json",
-        "application/json": "json",
-        "application/*": "json",
-        "application/sparql-results+xml": "xml",
-        "application/xml": "xml",
-        "text/csv": "csv",
-        "text/tab-separated-values": "tsv",
-        "text/*": "csv",
-    }
-
-    def _negotiate_select(self, h: BaseHTTPRequestHandler) -> str | None:
-        """Pick the SELECT/ASK serialization from the Accept header:
-        first acceptable media type in the client's listed order wins
-        (minimal negotiation — no q-value sorting, same policy as
-        :meth:`_accepts`); no header or a wildcard means JSON.  Returns
-        ``json`` | ``xml`` | ``csv`` | ``tsv``, or None for 406."""
-        accept = h.headers.get("Accept")
-        if not accept:
-            return "json"
-        for part in accept.split(","):
-            mt = part.split(";", 1)[0].strip().lower()
-            if mt == "*/*":
-                return "json"
-            fmt = self._SELECT_TYPES.get(mt)
-            if fmt is not None:
-                return fmt
-        return None
-
     #: namespaces for the service description document
     _SD = "http://www.w3.org/ns/sparql-service-description#"
     _FMT = "http://www.w3.org/ns/formats/"
@@ -267,7 +238,7 @@ class SparqlProtocolServer:
         """W3C SPARQL 1.1 Service Description: a GET on the endpoint
         with no ``query``/``update`` parameter returns RDF describing
         the service (languages, result formats, dataset features)."""
-        if not self._accepts(h, self._NT_TYPES):
+        if negotiate(h.headers.get("Accept"), _NT_TYPES) is None:
             self._plain(h, 406, "the service description is produced as "
                                 "application/n-triples")
             return
@@ -294,9 +265,6 @@ class SparqlProtocolServer:
         h.send_header("Content-Length", str(len(body)))
         h.end_headers()
         h.wfile.write(body)
-
-    def _negotiate_graph(self, h: BaseHTTPRequestHandler) -> str | None:
-        return negotiate_graph_type(h.headers.get("Accept"))
 
     def _handle(self, h: BaseHTTPRequestHandler, params: dict,
                 method: str = "POST") -> None:
@@ -337,7 +305,7 @@ class SparqlProtocolServer:
             self.queries.append(sparql)
             form = _query_form(sparql)
             if form in ("CONSTRUCT", "DESCRIBE"):
-                gfmt = self._negotiate_graph(h)
+                gfmt = negotiate(h.headers.get("Accept"), GRAPH_TYPES)
                 if gfmt is None:
                     self._plain(h, 406, "graph results are produced as "
                                         "application/n-triples, "
@@ -367,7 +335,7 @@ class SparqlProtocolServer:
                 h.end_headers()
                 h.wfile.write(body)
                 return
-            fmt = self._negotiate_select(h)
+            fmt = negotiate(h.headers.get("Accept"), _SELECT_TYPES)
             if fmt is None:
                 self._plain(h, 406, "SELECT/ASK results are produced as "
                                     "application/sparql-results+json, "

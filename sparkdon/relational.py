@@ -29,6 +29,8 @@ from typing import Dict
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparkdon.sizing import spread_narrow_scan
+
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: Dict[str, str] = {}
 
@@ -694,28 +696,12 @@ def q10_seq_decollect(spark, sf_dir):
 # flagship
 # ---------------------------------------------------------------------------
 
-def _spread_fact_scan(df: DataFrame) -> DataFrame:
-    """Round-robin an under-split FACT scan to the session's parallelism
-    (r17, guide §2.5 input skew): at fixture scale every parquet arrives
-    as ONE row group, so a scan-side pipeline of broadcast joins +
-    partial aggregation fuses into a single WholeStageCodegen stage on a
-    single core — flagship's entire 600k-row join/agg chain ran on 1 of
-    32 (measured 2.60 s quiet).  No-op once the scan has >= parallelism
-    splits (any real corpus), so nothing changes at 100 TB.  Twin of
-    ``pipeline._registry.spread_narrow_scan`` (kept separate: pipeline
-    imports this module, so importing back would cycle)."""
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < p:
-        return df.repartition(p)
-    return df
-
-
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The headline query for ``entry()``: revenue census by region and
     order-year — scan → broadcast dim joins → group → order (the
     property-census shape of DBpedia_Schema_Queries#cell10, writ
     relational)."""
-    l = _spread_fact_scan(table(spark, sf_dir, "lineitem"))
+    l = spread_narrow_scan(table(spark, sf_dir, "lineitem"))
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")

@@ -13,22 +13,25 @@ from __future__ import annotations
 import collections
 import re
 import sys
+import threading
 from functools import lru_cache
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from sparkdon import io as io_mod
 from sparkdon.algebra import (
-    AskQuery, ConstructQuery, DescribeQuery, Parser, SelectQuery, TermExpr,
-    Var, parse_query, parse_update,
+    AskQuery, ConstructQuery, DescribeQuery, SelectQuery, TermExpr, Var,
+    parse_query, parse_update,
 )
 from sparkdon.compile import Compiler
 from sparkdon.errors import SparkdonError, one_error
 from sparkdon.paths import fixpoint_union
 from sparkdon.terms import (
-    KIND_BNODE, KIND_IRI, KIND_LIT, RDF, BNode, IRI, Literal, n3, to_python,
+    KIND_BNODE, KIND_IRI, QUAD_SCHEMA, RDF, BNode, IRI, n3, named_or_empty,
+    to_python,
 )
 
 #: regex for substitutable variables ``?_x`` / ``$_x``
@@ -170,6 +173,18 @@ class Endpoint:
 
     # -- the select pipeline (Q1, Q2, Q7) ------------------------------
 
+    def _query(self, form: type, sparql: str, bindings: dict | None,
+               dataset: tuple | None, depth: int = 4):
+        """The one query entry: ``?_x`` substitution from ``bindings``
+        (else from the caller frame ``depth`` levels up), a cached parse
+        under this endpoint's prefixes, the query-form check and the
+        protocol-level dataset override."""
+        sparql = self._prepare(sparql, bindings, depth=depth)
+        q = _parse_query_cached(sparql, tuple(sorted(self.prefixes.items())), self.base_uri)
+        if not isinstance(q, form):
+            raise SparkdonError(_FORM_ERRORS[form])
+        return q if dataset is None else _with_dataset(q, dataset)
+
     def select_raw(self, sparql: str, bindings: dict | None = None,
                    _depth: int = 3, dataset: tuple | None = None) -> DataFrame:
         """Compile and return the raw Spark bindings DataFrame (one
@@ -181,12 +196,7 @@ class Endpoint:
         Protocol §2.1.4 it takes precedence over the query's own
         FROM/FROM NAMED clauses (used by the protocol server for
         ``default-graph-uri``/``named-graph-uri`` request params)."""
-        sparql = self._prepare(sparql, bindings, depth=_depth)
-        q = _parse_query_cached(sparql, tuple(sorted(self.prefixes.items())), self.base_uri)
-        if not isinstance(q, SelectQuery):
-            raise SparkdonError("select() requires a SELECT query")
-        if dataset is not None:
-            q = _with_dataset(q, dataset)
+        q = self._query(SelectQuery, sparql, bindings, dataset, depth=_depth + 1)
         return self._compiler(q).compile_select(q).df
 
     def explain(self, sparql: str, bindings: dict | None = None,
@@ -208,12 +218,7 @@ class Endpoint:
         """SELECT → pandas DataFrame with GROUP-BY index
         (gastrodon/__init__.py:487-511).  ``dataset`` as in
         :meth:`select_raw`."""
-        prepared = self._prepare(sparql, bindings, depth=3)
-        q = _parse_query_cached(prepared, tuple(sorted(self.prefixes.items())), self.base_uri)
-        if not isinstance(q, SelectQuery):
-            raise SparkdonError("select() requires a SELECT query")
-        if dataset is not None:
-            q = _with_dataset(q, dataset)
+        q = self._query(SelectQuery, sparql, bindings, dataset)
         sdf = self._compiler(q).compile_select(q)
         pdf_raw = sdf.df.toPandas()
         out: dict[str, pd.Series] = {}
@@ -227,22 +232,12 @@ class Endpoint:
             pdf = pdf.set_index(group_vars if len(group_vars) > 1 else group_vars[0])
         return pdf
 
-    def _decode(self, v) -> Any:
-        if v is None:
-            return None
-        kind, lex, dt, lang = v["kind"], v["lex"], v["dt"], v["lang"]
-        value = to_python(kind, lex, dt, lang)
-        if isinstance(value, IRI):
-            short = self.short_name(str(value))
-            return QName(short, str(value))
-        return value
-
     def _decode_column(self, col: pd.Series) -> pd.Series:
         """Vectorized term-struct decode: batch dispatch per term class
         (pandas boolean masks) instead of a per-cell unpack+dispatch loop,
         and IRIs are shortened ONCE per distinct URI instead of scanning
-        the prefix table per row.  Semantics identical to ``_decode``
-        (delegates to ``to_python`` for the rare classes)."""
+        the prefix table per row.  Rare classes go through
+        ``to_python``."""
         from sparkdon.terms import (
             KIND_BNODE as _BN, KIND_IRI as _IR, KIND_LIT as _LI,
             NUMERIC_DATATYPES, XSD,
@@ -302,24 +297,23 @@ class Endpoint:
         """CONSTRUCT → a new LocalEndpoint over the constructed graph
         (gastrodon/__init__.py:525-534 returns a Graph; our graph type IS
         the triple DataFrame).  ``dataset`` as in :meth:`select_raw`."""
-        sparql = self._prepare(sparql, bindings)
-        q = _parse_query_cached(sparql, tuple(sorted(self.prefixes.items())), self.base_uri)
-        if not isinstance(q, ConstructQuery):
-            raise SparkdonError("construct() requires a CONSTRUCT query")
-        if dataset is not None:
-            q = _with_dataset(q, dataset)
+        q = self._query(ConstructQuery, sparql, bindings, dataset)
         out = self._compiler(q).compile_construct(q)
         return LocalEndpoint(self.spark, out, prefixes=self.prefixes, base_uri=self.base_uri)
 
     def ask(self, sparql: str, bindings: dict | None = None,
             dataset: tuple | None = None) -> bool:
-        sparql = self._prepare(sparql, bindings)
-        q = _parse_query_cached(sparql, tuple(sorted(self.prefixes.items())), self.base_uri)
-        if not isinstance(q, AskQuery):
-            raise SparkdonError("ask() requires an ASK query")
-        if dataset is not None:
-            q = _with_dataset(q, dataset)
+        q = self._query(AskQuery, sparql, bindings, dataset)
         return self._compiler(q).compile_ask(q)
+
+
+#: query form -> the error raised when an entry point gets another form
+_FORM_ERRORS = {
+    SelectQuery: "select() requires a SELECT query",
+    ConstructQuery: "construct() requires a CONSTRUCT query",
+    AskQuery: "ask() requires an ASK query",
+    DescribeQuery: "describe() requires a DESCRIBE query",
+}
 
 
 def _with_dataset(q, dataset: tuple):
@@ -449,7 +443,14 @@ def _normalize_column_type(col: pd.Series) -> pd.Series:
 
 class LocalEndpoint(Endpoint):
     """Endpoint over an in-session triple DataFrame
-    (reference ``LocalEndpoint``, gastrodon/__init__.py:778-805)."""
+    (reference ``LocalEndpoint``, gastrodon/__init__.py:778-805).
+
+    One write path: every mutation — each SPARQL Update form,
+    :meth:`update_to_fixpoint` and the Graph Store Protocol's
+    :meth:`write_graph` — runs under the endpoint's one re-entrant lock
+    and ends in :meth:`_commit`, which swaps ``graph`` or ``named`` to a
+    new immutable snapshot.  Reads take no lock: a query runs on the
+    snapshots it read, old or new, never a half-applied write."""
 
     def __init__(self, spark: SparkSession, graph: DataFrame,
                  prefixes: dict[str, str] | None = None, base_uri: str | None = None,
@@ -468,10 +469,11 @@ class LocalEndpoint(Endpoint):
         #: graph, the way the reference's ConjunctiveGraph answers
         #: non-GRAPH patterns from all contexts
         self.union_default = union_default
+        #: held by every writer from its first read of the snapshots to
+        #: its last commit, so concurrent writes apply one after another
+        self._lock = threading.RLock()
 
     def _compiler(self, q=None) -> Compiler:
-        from pyspark.sql import functions as F
-
         triples, named = self.graph, self.named
         if named is not None and self.union_default:
             triples = triples.unionByName(named.drop("g")).dropDuplicates()
@@ -483,10 +485,7 @@ class LocalEndpoint(Endpoint):
             # Graph names resolve against the named store; identical
             # triples across merged graphs collapse (set semantics).
             dflt, nmd = ds
-            src = named
-            if src is None:
-                from sparkdon.terms import QUAD_SCHEMA
-                src = self.spark.createDataFrame([], QUAD_SCHEMA)
+            src = named_or_empty(self.spark, named)
             if dflt:
                 triples = (src.filter(F.col("g").isin([str(i) for i in dflt]))
                            .drop("g").dropDuplicates())
@@ -496,63 +495,115 @@ class LocalEndpoint(Endpoint):
                      if nmd else src.limit(0))
         return Compiler(self.spark, triples, use_ids=self.use_ids, named=named)
 
-    # -- update (Q4 / S6) ----------------------------------------------
+    # -- graph access ----------------------------------------------------
+
+    def named_graph(self, iri: str) -> DataFrame:
+        """The triples of named graph ``iri`` in the current snapshot
+        (empty when absent)."""
+        return (named_or_empty(self.spark, self.named)
+                .filter(F.col("g") == iri).drop("g"))
+
+    def has_graph(self, iri: str) -> bool:
+        """Whether named graph ``iri`` holds a triple (empty named
+        graphs are not recorded)."""
+        return self.named is not None and not self.named_graph(iri).isEmpty()
+
+    # -- the write path (Q4 / S6) ----------------------------------------
+
+    def _commit(self, named: bool = False, keep=True, delete=None,
+                insert=None) -> None:
+        """The one write: build the complete new default graph — with
+        ``named``, the complete new named store — checkpoint it as an
+        immutable snapshot and assign it once, under the write lock.
+
+        ``keep`` picks the current rows the new frame starts from: all
+        (True) or those matching a Column predicate; ``delete`` rows
+        then go and ``insert`` rows come in with set semantics.  Frames
+        use the target's schema (QUAD_SCHEMA for the named store).
+        ``keep=False`` replaces the frame: ``insert``, already a set,
+        becomes it as is; with nothing to insert the default graph
+        empties and the named store is dropped (None)."""
+        with self._lock:
+            if keep is False:
+                new = insert
+                if new is None and not named:
+                    new = self.graph.limit(0)
+            else:
+                new = named_or_empty(self.spark, self.named) if named else self.graph
+                if keep is not True:
+                    new = new.filter(keep)
+                if delete is not None:
+                    new = new.subtract(delete)
+                if insert is not None:
+                    new = new.unionByName(insert).dropDuplicates()
+            if new is not None:
+                new = new.localCheckpoint(eager=True)
+            if named:
+                self.named = new
+            else:
+                self.graph = new
+
+    def _commit_graph(self, iri: str | None, delete=None, insert=None,
+                      replace: bool = False) -> None:
+        """:meth:`_commit` for one graph — the default graph (``iri``
+        None) or named graph ``iri`` — from triple frames; ``replace``
+        empties that graph first."""
+        if iri is None:
+            self._commit(keep=not replace, delete=delete, insert=insert)
+            return
+        g = F.lit(iri)
+        self._commit(named=True, keep=(F.col("g") != iri) if replace else True,
+                     delete=None if delete is None else delete.withColumn("g", g),
+                     insert=None if insert is None else insert.withColumn("g", g))
+
+    def write_graph(self, iri: str | None, triples: DataFrame | None,
+                    replace: bool) -> bool:
+        """Whole-graph write (Graph Store Protocol): replace (PUT) or
+        merge (POST, ``replace=False``) the default graph (``iri`` None)
+        or named graph ``iri`` with ``triples``; ``triples=None`` with
+        ``replace`` drops it (DELETE).  Returns whether the graph existed
+        before — the default graph always does.  The check and the
+        commit share one hold of the write lock; dropping an absent
+        graph commits nothing."""
+        with self._lock:
+            existed = iri is None or self.has_graph(iri)
+            if existed or triples is not None:
+                self._commit_graph(iri, insert=triples, replace=replace)
+            return existed
 
     def update(self, sparql: str, bindings: dict | None = None) -> None:
         """One or more ``;``-separated update operations applied in
-        sequence (each sees its predecessors' effects); the graph
-        reference is swapped to a new immutable snapshot per operation
-        (gastrodon mutates rdflib in place,
-        gastrodon/__init__.py:596-623, 803-805)."""
+        sequence, each seeing its predecessors' effects and committing
+        its own snapshot.  The request holds the write lock throughout,
+        so concurrent writers — in-process callers, the SPARQL protocol
+        server and the Graph Store Protocol — apply one after another
+        and none loses another's triples (gastrodon mutates rdflib in
+        place, gastrodon/__init__.py:596-623, 803-805)."""
         sparql = self._prepare(sparql, bindings)
         ops = _parse_update_cached(sparql, tuple(sorted(self.prefixes.items())), self.base_uri)
-        for u in ops:
-            self._apply_update(u)
+        with self._lock:
+            for u in ops:
+                self._apply_update(u)
 
     def _apply_update(self, u) -> None:
         from types import SimpleNamespace
 
-        from pyspark.sql import functions as F
-
-        # §3.1.3/§3.1.5.2: the WHERE clause's dataset — USING/USING NAMED
-        # win with FROM-style replace semantics; a bare WITH only swaps
-        # the DEFAULT graph for matching (GRAPH patterns still see the
-        # full named store — WITH supplies a graph for the parts that
-        # don't name one, it does not erase the dataset like USING does)
-        if getattr(u, "using", None) is not None:
-            compiler = self._compiler(SimpleNamespace(dataset=u.using))
-        elif getattr(u, "with_graph", None):
-            from sparkdon.terms import QUAD_SCHEMA
-
-            src = self.named
-            if src is None:
-                src = self.spark.createDataFrame([], QUAD_SCHEMA)
-            compiler = Compiler(
-                self.spark,
-                src.filter(F.col("g") == str(u.with_graph)).drop("g"),
-                use_ids=self.use_ids, named=self.named)
-        else:
-            compiler = self._compiler()
-        new = self.graph
         if u.clear:
             # SPARQL 1.1 Update §3.2.3: DEFAULT empties the default
             # graph, NAMED drops every named graph, ALL both, GRAPH <g>
             # one named graph (failure when absent, unless SILENT)
             if u.clear in ("DEFAULT", "ALL"):
-                self.graph = new.limit(0).localCheckpoint(eager=True)
+                self._commit_graph(None, replace=True)
             if u.clear in ("NAMED", "ALL"):
-                self.named = None
+                self._commit(named=True, keep=False)
             elif u.clear == "GRAPH":
                 target = str(u.clear_graph)
-                present = (self.named is not None and
-                           self.named.filter(F.col("g") == target).take(1))
-                if not present and not u.silent:
+                if self.has_graph(target):
+                    self._commit_graph(target, replace=True)
+                elif not u.silent:
                     raise SparkdonError(
                         f"CLEAR GRAPH <{target}>: no such named graph "
                         "(add SILENT to make this a no-op)")
-                if present:
-                    self.named = (self.named.filter(F.col("g") != target)
-                                  .localCheckpoint(eager=True))
             return
         if getattr(u, "manage", None):
             self._apply_graph_management(u)
@@ -562,6 +613,7 @@ class LocalEndpoint(Endpoint):
         if (u.where is None and not u.insert_template
                 and not u.delete_template):
             return  # pure no-op request (CREATE, quad-data-only, …)
+        with_graph = str(u.with_graph) if getattr(u, "with_graph", None) else None
         if u.where is None:
             ins_df = (io_mod.triples_df(self.spark, [
                 io_mod._encode_triple(t.s, t.p, t.o)
@@ -570,31 +622,33 @@ class LocalEndpoint(Endpoint):
                 io_mod._encode_triple(t.s, t.p, t.o)
                 for t in u.delete_template]) if u.delete_template else None)
         else:
+            # §3.1.3/§3.1.5.2: the WHERE clause's dataset — USING/USING
+            # NAMED win with FROM-style replace semantics; a bare WITH
+            # only swaps the DEFAULT graph for matching (GRAPH patterns
+            # still see the full named store — WITH supplies a graph for
+            # the parts that don't name one, it does not erase the
+            # dataset like USING does)
+            if getattr(u, "using", None) is not None:
+                compiler = self._compiler(SimpleNamespace(dataset=u.using))
+            elif with_graph:
+                compiler = Compiler(self.spark, self.named_graph(with_graph),
+                                    use_ids=self.use_ids, named=self.named)
+            else:
+                compiler = self._compiler()
             del_df = (compiler.compile_construct(
                 ConstructQuery(template=u.delete_template, where=u.where))
                 if u.delete_template else None)
             ins_df = (compiler.compile_construct(
                 ConstructQuery(template=u.insert_template, where=u.where))
                 if u.insert_template else None)
-        if getattr(u, "with_graph", None):
-            # WITH <g>: templates modify the named graph, not the default
-            self._modify_named_graph(str(u.with_graph), ins_df, del_df)
-            return
-        if del_df is not None:
-            new = new.subtract(del_df)
-        if ins_df is not None:
-            new = new.unionByName(ins_df).dropDuplicates()
-        self.graph = new.localCheckpoint(eager=True)
+        # WITH <g>: templates modify the named graph, not the default
+        self._commit_graph(with_graph, delete=del_df, insert=ins_df)
 
     def _apply_graph_management(self, u) -> None:
         """ADD / COPY / MOVE (SPARQL 1.1 Update §3.2.5-3.2.7): dataset
         ops over the quad store; ``DEFAULT`` is the triple frame.  Same
         source and destination is the spec's no-op; an absent named
         source fails unless SILENT (we don't record empty graphs)."""
-        from pyspark.sql import functions as F
-
-        from sparkdon.terms import QUAD_SCHEMA
-
         if u.manage == "LOAD":
             return self._apply_load(u)
         src_iri = str(u.mg_src) if u.mg_src else None
@@ -603,35 +657,18 @@ class LocalEndpoint(Endpoint):
             return
         if src_iri is None:
             src_df = self.graph
+        elif self.has_graph(src_iri):
+            src_df = self.named_graph(src_iri)
+        elif u.silent:
+            return
         else:
-            src_df = (self.named.filter(F.col("g") == src_iri).drop("g")
-                      if self.named is not None else None)
-            if src_df is None or src_df.isEmpty():
-                if u.silent:
-                    return
-                raise SparkdonError(
-                    f"{u.manage} <{src_iri}>: no such named graph "
-                    "(add SILENT to make this a no-op)")
-        replace = u.manage in ("COPY", "MOVE")
-        if dst_iri is None:
-            new = (src_df if replace
-                   else self.graph.unionByName(src_df).dropDuplicates())
-            self.graph = new.localCheckpoint(eager=True)
-        else:
-            named = self.named
-            if named is None:
-                named = self.spark.createDataFrame([], QUAD_SCHEMA)
-            if replace:
-                named = named.filter(F.col("g") != dst_iri)
-            named = named.unionByName(
-                src_df.withColumn("g", F.lit(dst_iri))).dropDuplicates()
-            self.named = named.localCheckpoint(eager=True)
+            raise SparkdonError(
+                f"{u.manage} <{src_iri}>: no such named graph "
+                "(add SILENT to make this a no-op)")
+        self._commit_graph(dst_iri, insert=src_df,
+                           replace=u.manage in ("COPY", "MOVE"))
         if u.manage == "MOVE":
-            if src_iri is None:
-                self.graph = self.graph.limit(0).localCheckpoint(eager=True)
-            else:
-                self.named = (self.named.filter(F.col("g") != src_iri)
-                              .localCheckpoint(eager=True))
+            self._commit_graph(src_iri, replace=True)
 
     def _apply_load(self, u) -> None:
         """``LOAD [SILENT] <doc> [INTO GRAPH <g>]`` (§3.1.4): fetch one
@@ -676,50 +713,21 @@ class LocalEndpoint(Endpoint):
             if u.silent:
                 return
             raise SparkdonError(f"LOAD <{doc}> failed: {e}") from e
-        add = io_mod.triples_df(self.spark, rows)
-        if u.mg_dst is None:
-            self.graph = (self.graph.unionByName(add).dropDuplicates()
-                          .localCheckpoint(eager=True))
-        else:
-            self._modify_named_graph(str(u.mg_dst), add, None)
-
-    def _modify_named_graph(self, g: str, ins_df, del_df) -> None:
-        """Apply computed insert/delete triple frames to one named graph
-        (the WITH target), immutable-snapshot swap like every mutation."""
-        from pyspark.sql import functions as F
-
-        from sparkdon.terms import QUAD_SCHEMA
-
-        named = self.named
-        if named is None:
-            named = self.spark.createDataFrame([], QUAD_SCHEMA)
-        if del_df is not None:
-            named = named.subtract(del_df.withColumn("g", F.lit(g)))
-        if ins_df is not None:
-            named = named.unionByName(
-                ins_df.withColumn("g", F.lit(g))).dropDuplicates()
-        self.named = named.localCheckpoint(eager=True)
+        dst = str(u.mg_dst) if u.mg_dst is not None else None
+        self._commit_graph(dst, insert=io_mod.triples_df(self.spark, rows))
 
     def _apply_quad_data(self, insert_quads, delete_quads) -> None:
         """Ground ``GRAPH <g> { … }`` blocks from INSERT DATA / DELETE
-        DATA applied to the named store (SPARQL 1.1 Update §3.1)."""
-        from pyspark.sql import functions as F
+        DATA applied to the named store (SPARQL 1.1 Update §3.1): one
+        commit whatever number of graphs the blocks name."""
 
-        from sparkdon.terms import QUAD_SCHEMA
+        def quads(pairs):
+            return self.spark.createDataFrame(
+                [io_mod._encode_triple(t.s, t.p, t.o) + (str(g),)
+                 for g, t in pairs], QUAD_SCHEMA) if pairs else None
 
-        named = self.named
-        if named is None:
-            named = self.spark.createDataFrame([], QUAD_SCHEMA)
-        if insert_quads:
-            rows = [io_mod._encode_triple(t.s, t.p, t.o) + (str(g),)
-                    for g, t in insert_quads]
-            named = named.unionByName(
-                self.spark.createDataFrame(rows, QUAD_SCHEMA)).dropDuplicates()
-        if delete_quads:
-            rows = [io_mod._encode_triple(t.s, t.p, t.o) + (str(g),)
-                    for g, t in delete_quads]
-            named = named.subtract(self.spark.createDataFrame(rows, QUAD_SCHEMA))
-        self.named = named.localCheckpoint(eager=True)
+        self._commit(named=True, delete=quads(delete_quads),
+                     insert=quads(insert_quads))
 
     def update_to_fixpoint(self, sparql: str, bindings: dict | None = None) -> None:
         """Apply an INSERT-WHERE rule until no new triples appear —
@@ -761,8 +769,9 @@ class LocalEndpoint(Endpoint):
                     out = part if out is None else out.unionByName(part)
                 return out
 
-        self.graph = fixpoint_union(self.graph, produce,
-                                    produce_delta=produce_delta)
+        with self._lock:
+            self._commit(keep=False, insert=fixpoint_union(
+                self.graph, produce, produce_delta=produce_delta))
 
     # -- helpers -------------------------------------------------------
 
@@ -772,8 +781,6 @@ class LocalEndpoint(Endpoint):
     def all_uri(self) -> set[str]:
         """Set of every IRI in the graph (gastrodon/__init__.py:821-834).
         Distributed distinct, bounded collect."""
-        from pyspark.sql import functions as F
-
         subs = self.graph.filter(F.col("s_kind") == KIND_IRI).select(F.col("s").alias("u"))
         preds = self.graph.select(F.col("p").alias("u"))
         objs = self.graph.filter(F.col("o_kind") == KIND_IRI).select(F.col("o").alias("u"))
@@ -800,8 +807,6 @@ class LocalEndpoint(Endpoint):
         million resources is the same number of Spark jobs as one.
         ``graph`` overrides the traversed triple frame (a dataset-scoped
         DESCRIBE passes its FROM-merged default graph)."""
-        from pyspark.sql import functions as F
-
         g = self.graph if graph is None else graph
         frontier = nodes.localCheckpoint(eager=True)
         seen = frontier
@@ -843,14 +848,7 @@ class LocalEndpoint(Endpoint):
         ``DESCRIBE <iri>...`` describes constants; ``DESCRIBE ?v ...
         WHERE {...}`` describes every IRI/bnode the WHERE clause binds to
         the listed variables; ``DESCRIBE *`` takes every variable."""
-        from pyspark.sql import functions as F
-
-        sparql = self._prepare(sparql, bindings)
-        q = _parse_query_cached(sparql, tuple(sorted(self.prefixes.items())), self.base_uri)
-        if not isinstance(q, DescribeQuery):
-            raise SparkdonError("describe() requires a DESCRIBE query")
-        if dataset is not None:
-            q = _with_dataset(q, dataset)
+        q = self._query(DescribeQuery, sparql, bindings, dataset)
         # dataset-aware compiler: FROM/FROM NAMED (or the protocol
         # override) scope both the WHERE resolution AND the CBD
         # traversal to the dataset's default graph
@@ -889,8 +887,6 @@ class LocalEndpoint(Endpoint):
         RDFContainers#cell50-52), Bag → collections.Counter
         (gastrodon ``decollect``, gastrodon/__init__.py:403-463; the
         reference's Alt→Seq fallthrough at 418-420 is reproduced)."""
-        from pyspark.sql import functions as F
-
         node = self._resolve_node(node)
         kind = KIND_BNODE if isinstance(node, BNode) else KIND_IRI
         facts = self.graph.filter(
@@ -968,7 +964,6 @@ def canonicalize_bnodes(graph: DataFrame, max_iters: int = 16) -> DataFrame:
     window is over #bnodes rows (bounded — peel/DESCRIBE closures, not
     whole corpora)."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     bnodes = (
         graph.filter(F.col("s_kind") == KIND_BNODE).select(F.col("s").alias("n"))
@@ -1159,8 +1154,6 @@ def from_nquads(path: str, spark: SparkSession,
                 union_default: bool = False) -> LocalEndpoint:
     """N-Quads file → LocalEndpoint: null-graph lines form the default
     graph, the rest the named store (distributed line-parallel scan)."""
-    from pyspark.sql import functions as F
-
     df = io_mod.read_nquads(spark, path)
     merged = dict(_DEFAULT_PREFIXES)
     merged.update(prefixes or {})

@@ -150,6 +150,12 @@ QUAD_SCHEMA = T.StructType(
 )
 
 
+def named_or_empty(spark, named):
+    """The named-graph quad store, or an empty one for a dataset that has
+    none (``named`` None: GRAPH matches nothing)."""
+    return named if named is not None else spark.createDataFrame([], QUAD_SCHEMA)
+
+
 def make_term(kind: Column | str, lex: Column, dt: Column | None = None,
               lang: Column | None = None) -> Column:
     """Build a term struct Column from components."""

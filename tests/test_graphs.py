@@ -9,6 +9,10 @@ compiler slices per active graph; no reference code is used.
 
 from __future__ import annotations
 
+import threading
+import urllib.parse
+import urllib.request
+
 import pytest
 
 from sparkdon.errors import SparkdonError
@@ -415,3 +419,70 @@ def test_load_resolves_relative_iris(ep, tmp_path):
     pdf = ep.select("SELECT ?s WHERE { GRAPH :grel { ?s :age 9 } }")
     # RFC 3986: <thing> resolves as a SIBLING of rel.ttl
     assert rows(pdf) == [(f"file://{tmp_path}/thing",)]
+
+
+def test_concurrent_updates_keep_every_write(spark):
+    """Two writers released together by a barrier, four rounds each:
+    the write lock serializes their read-modify-commit, so no round's
+    snapshot swap drops the other writer's triple."""
+    e = inline("<urn:g:a> <urn:p:n> 1 .", spark)
+    barrier = threading.Barrier(2, timeout=300)
+
+    def write(i: int) -> None:
+        for r in range(4):
+            barrier.wait()
+            e.update(f'INSERT DATA {{ <urn:g:w{i}> <urn:p:round> "{r}" }}')
+
+    threads = [threading.Thread(target=write, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert e.graph.filter("p = 'urn:p:round'").count() == 8
+
+
+def test_graph_store_post_and_sparql_update_share_the_write_lock(spark):
+    """A Graph Store Protocol POST and a SPARQL protocol INSERT DATA into
+    the same named graph, sent together: both go through the endpoint's
+    one write path, so both triples survive."""
+    from sparkdon.graphstore import GraphStoreServer
+    from sparkdon.protocol import SparqlProtocolServer
+
+    g = "urn:g:shared"
+    e = inline("<urn:g:a> <urn:p:n> 1 .", spark)
+    barrier = threading.Barrier(2, timeout=300)
+    gsp = GraphStoreServer(e).start()
+    sparql = SparqlProtocolServer(e).start()
+    posts = [
+        urllib.request.Request(
+            gsp.url + "?" + urllib.parse.urlencode({"graph": g}),
+            data=b"<urn:s:gsp> <urn:p:q> 1 .",
+            headers={"Content-Type": "application/n-triples"}, method="POST"),
+        urllib.request.Request(
+            sparql.url,
+            data=f"INSERT DATA {{ GRAPH <{g}> {{ <urn:s:sparql> <urn:p:q> 2 }} }}"
+            .encode(),
+            headers={"Content-Type": "application/sparql-update"},
+            method="POST"),
+    ]
+    status: list[int] = []
+
+    def send(r) -> None:
+        barrier.wait()
+        with urllib.request.urlopen(r, timeout=300) as resp:
+            status.append(resp.status)
+
+    try:
+        threads = [threading.Thread(target=send, args=(r,)) for r in posts]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        gsp.stop()
+        sparql.stop()
+    assert len(status) == 2
+    got = {r["s"] for r in e.named_graph(g).select("s").collect()}
+    assert got == {"urn:s:gsp", "urn:s:sparql"}
