@@ -16,6 +16,22 @@ closures (a constant on either end — the common case in the corpus, e.g.
 the reachable cone, not the full relation; only a fully unanchored
 ``?x p* ?y`` pays for the complete transitive closure.
 
+An anchored closure runs in one of three tiers, picked by the size of
+its step relation (:func:`anchored_closure`):
+
+- **driver** — the anchors are a term list on the driver (constant
+  endpoints, all-constant ``VALUES``) and the step has fewer than
+  :data:`CLOSURE_IDS_MIN_STEP` rows and a measured byte estimate within
+  ``spark.sql.autoBroadcastJoinThreshold``: the step is collected once
+  (one bounded job) and walked in Python.  At that size every
+  distributed BFS level would broadcast the whole step anyway.
+- **struct loop** — the distributed BFS on term structs, for anchor
+  DataFrames (sideways information passing, ``GRAPH ?g``) and for steps
+  over the broadcast threshold; the step side of each level broadcasts
+  when it fits.
+- **id loop** — the same BFS on 64-bit term ids, for steps of at least
+  :data:`CLOSURE_IDS_MIN_STEP` rows.
+
 Reference exercisers: ``rdfs:subClassOf*`` DBpedia_Schema_Queries#cell77-82,
 ``rdfs:member+`` Inference_Over_RDF_Containers#cell58, ``^rdfs:member``
 from a literal anchor #cell56,64.
@@ -23,6 +39,7 @@ from a literal anchor #cell56,64.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -154,6 +171,20 @@ def _retire(df: DataFrame | None) -> None:
         pass
 
 
+def _is_checkpoint(df: DataFrame) -> bool:
+    """Whether ``df`` reads straight off checkpointed blocks: its
+    analyzed plan is a ``LogicalRDD`` over a checkpointed RDD (a frame
+    made by ``createDataFrame`` is a ``LogicalRDD`` too, but recomputes).
+    Best-effort like :func:`_retire`: an unreadable plan counts as not
+    checkpointed."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        return (plan.getClass().getSimpleName() == "LogicalRDD"
+                and plan.rdd().isCheckpointed())
+    except Py4JError:
+        return False
+
+
 #: Run the semi-naive closure loops on 64-bit term ids instead of term
 #: structs (round 10).  Every BFS level is a shuffle join + a subtract;
 #: with raw terms those shuffles move ~60-120-byte (kind, lex, dt, lang)
@@ -278,7 +309,14 @@ def _step_join_side(step: DataFrame, n_rows: int | None, ids: bool,
     The id path costs a fixed 64 B/row; the struct path uses the
     caller's MEASURED ``struct_bytes`` (unbounded RDF literals make any
     flat per-row constant unsafe) and declines the hint when no
-    measurement is available."""
+    measurement is available.
+
+    An anchored closure whose anchors are a driver-side term list never
+    gets here with a step that would broadcast as structs: that step
+    goes to the driver tier (:func:`_driver_closure`) instead.  The
+    struct hint therefore serves the unanchored loop and anchor
+    DataFrames (SIP, ``GRAPH ?g``); the id hint serves every step at or
+    above :data:`CLOSURE_IDS_MIN_STEP` rows."""
     if n_rows is None:
         return step
     thr = _broadcast_threshold_bytes(step.sparkSession)
@@ -398,17 +436,102 @@ def _closure_loop(step: DataFrame, n_rows: int | None = None,
     raise QueryExecutionError("path closure did not converge")
 
 
-def anchored_closure(spark, step: DataFrame, anchors: DataFrame,
+def _collect_small_step(step: DataFrame):
+    """The step's rows when the driver tier may take it, else None.
+
+    The tier needs fewer than :data:`CLOSURE_IDS_MIN_STEP` rows (the id
+    bar is checked first, so forcing it to 0 keeps the id loop) and a
+    :func:`_step_stats`-style byte estimate within the broadcast
+    threshold.  Every row costs at least the per-row overhead, so no
+    step over ``threshold / overhead`` rows can fit: one bounded
+    ``limit(cap + 1).collect()`` both sizes the step and fetches it,
+    and the estimate is summed on the driver."""
+    thr = _broadcast_threshold_bytes(step.sparkSession)
+    cap = min(thr // _BCAST_BYTES_STRUCT_ROW_OVERHEAD,
+              CLOSURE_IDS_MIN_STEP - 1)
+    if thr <= 0 or cap < 0:  # broadcasts off, or the id loop forced
+        return None
+    rows = step.limit(cap + 1).collect()
+    if len(rows) > cap:
+        return None
+    chars = sum(len(f) for r in rows for term in r for f in term[1:]
+                if f is not None)
+    if len(rows) * _BCAST_BYTES_STRUCT_ROW_OVERHEAD + 2 * chars > thr:
+        return None
+    return rows
+
+
+def _driver_closure(spark, rows, anchors: list, forward: bool,
+                    include_zero: bool) -> DataFrame:
+    """The driver tier: per-anchor BFS over the collected step rows,
+    returned as one local (anchor, node) term-struct DataFrame.
+
+    Same semantics as :func:`_anchored_loop`: ``include_zero`` pairs
+    every anchor with itself; otherwise an anchor pairs with itself only
+    when a cycle re-reaches it.  A backward closure walks the reversed
+    step, and a cone still growing after :data:`MAX_ITERATIONS` levels
+    raises."""
+    adj: dict[tuple, set] = {}
+    for r in rows:
+        a, b = tuple(r[0]), tuple(r[1])
+        if not forward:
+            a, b = b, a
+        adj.setdefault(a, set()).add(b)
+    out = []
+    for anchor in dict.fromkeys(_const_struct_row(t) for t in anchors):
+        seen = {anchor}
+        frontier = [anchor]
+        cycle = False
+        for _ in range(MAX_ITERATIONS):
+            nxt = []
+            for node in frontier:
+                for m in adj.get(node, ()):
+                    if m not in seen:
+                        seen.add(m)
+                        nxt.append(m)
+                    elif m == anchor:
+                        cycle = True
+            if not nxt:
+                break
+            frontier = nxt
+        else:
+            raise QueryExecutionError("path closure did not converge")
+        if not (include_zero or cycle):
+            seen.discard(anchor)
+        out.extend((anchor, node) for node in seen)
+    return spark.createDataFrame(
+        out, f"anchor {TERM_STRUCT_DDL}, node {TERM_STRUCT_DDL}")
+
+
+def anchored_closure(spark, step: DataFrame, anchors,
                      forward: bool, include_zero: bool) -> DataFrame:
     """BFS closure from a set of anchor nodes, with per-anchor provenance.
 
-    With the id representation (chosen by measured step size, see
-    :data:`CLOSURE_IDS_MIN_STEP`) the BFS frontier carries (anchor_id,
-    node_id) long pairs — 16 bytes per row through every per-level
-    shuffle — and the final (anchor, node) pairs decode via two id→term
-    joins.  The loop body (:func:`_anchored_loop`) is
-    representation-agnostic; the measured count AND byte estimate also
-    feed the loop's step-side broadcast pick (:func:`_step_join_side`)."""
+    ``anchors`` is a list of terms (constants, VALUES) or a one-column
+    ``node`` DataFrame (SIP, ``GRAPH ?g``).  Three tiers, picked by the
+    step's size:
+
+    - **driver** (:func:`_driver_closure`): list anchors and a step
+      under :data:`CLOSURE_IDS_MIN_STEP` rows whose byte estimate fits
+      the broadcast threshold — one bounded collect, a Python BFS, a
+      local result frame;
+    - **id loop**: steps of at least :data:`CLOSURE_IDS_MIN_STEP` raw
+      rows — the BFS frontier carries (anchor_id, node_id) long pairs,
+      16 bytes per row through every per-level shuffle, and the final
+      (anchor, node) pairs decode via two id→term joins;
+    - **struct loop**: everything else, on term structs.
+
+    The loop body (:func:`_anchored_loop`) is representation-agnostic;
+    the measured count AND byte estimate also feed the loop's step-side
+    broadcast pick (:func:`_step_join_side`)."""
+    if not isinstance(anchors, DataFrame):
+        rows = _collect_small_step(step)
+        if rows is not None:
+            return _driver_closure(spark, rows, anchors, forward,
+                                   include_zero)
+        anchors = spark.createDataFrame(
+            [(_const_struct_row(t),) for t in anchors],
+            f"node {TERM_STRUCT_DDL}")
     n_raw = bytes_raw = None
     if CLOSURE_IDS:
         n_raw, bytes_raw = _step_stats(step)
@@ -559,12 +682,8 @@ def eval_path(compiler, path, start_const, end_const,
                 bwd = end_anchors
         if fwd is not None or bwd is not None:
             forward = fwd is not None
-            src = fwd if forward else bwd
-            anchors = (src if isinstance(src, DataFrame)
-                       else spark.createDataFrame(
-                           [(_const_struct_row(t),) for t in src],
-                           f"node {TERM_STRUCT_DDL}"))
-            pairs = anchored_closure(spark, step, anchors, forward, include_zero)
+            pairs = anchored_closure(spark, step, fwd if forward else bwd,
+                                     forward, include_zero)
             if forward:
                 return pairs.select(F.col("anchor").alias("start"),
                                     F.col("node").alias("end"))
@@ -611,9 +730,15 @@ def fixpoint_union(store: DataFrame, produce_new,
       O(|store|), and ``subtract`` (≡ EXCEPT DISTINCT) keeps each
       generation distinct and disjoint from all earlier ones.  The
       generation list compacts every ``_SEEN_COMPACT_LEVELS`` rounds to
-      bound plan depth on deep fixpoints."""
-    gens = [store.localCheckpoint(eager=True)]
-    current = gens[0]
+      bound plan depth on deep fixpoints.
+
+    A store that is already a checkpoint (every endpoint graph after its
+    first write) seeds the generation list as is: copying it again
+    before round one would only duplicate its blocks.  It belongs to
+    the caller, so compaction never retires it."""
+    seed = store if _is_checkpoint(store) else store.localCheckpoint(eager=True)
+    gens = [seed]
+    current = seed
     delta = None
     for _ in range(max_iterations):
         if produce_delta is not None and delta is not None:
@@ -636,7 +761,8 @@ def fixpoint_union(store: DataFrame, produce_new,
             old = gens[:-1]
             base = _lazy_union(old).localCheckpoint(eager=True)
             for g in old:
-                _retire(g)
+                if g is not store:
+                    _retire(g)
             gens = [base, delta]
             current = _lazy_union(gens)
     raise QueryExecutionError("rule fixpoint did not converge")

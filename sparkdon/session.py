@@ -469,16 +469,20 @@ class LocalEndpoint(Endpoint):
         #: graph, the way the reference's ConjunctiveGraph answers
         #: non-GRAPH patterns from all contexts
         self.union_default = union_default
+        #: (graph, named, view): the union default graph materialized
+        #: for one snapshot pair, reused while both snapshots stand
+        self._union_view = None
         #: held by every writer from its first read of the snapshots to
         #: its last commit, so concurrent writes apply one after another
         self._lock = threading.RLock()
 
     def _compiler(self, q=None) -> Compiler:
         triples, named = self.graph, self.named
-        if named is not None and self.union_default:
-            triples = triples.unionByName(named.drop("g")).dropDuplicates()
         ds = getattr(q, "dataset", None)
-        if ds is not None:
+        if ds is None:
+            if named is not None and self.union_default:
+                triples = self._union_default_graph(triples, named)
+        else:
             # SPARQL 1.1 §13.2: any FROM/FROM NAMED replaces the store
             # dataset — default := merge of the FROM graphs (empty when
             # only FROM NAMED appears), named := the FROM NAMED set.
@@ -490,10 +494,23 @@ class LocalEndpoint(Endpoint):
                 triples = (src.filter(F.col("g").isin([str(i) for i in dflt]))
                            .drop("g").dropDuplicates())
             else:
-                triples = self.graph.limit(0)
+                triples = triples.limit(0)
             named = (src.filter(F.col("g").isin([str(i) for i in nmd]))
                      if nmd else src.limit(0))
         return Compiler(self.spark, triples, use_ids=self.use_ids, named=named)
+
+    def _union_default_graph(self, graph: DataFrame, named: DataFrame) -> DataFrame:
+        """``graph ∪ named`` (deduped), checkpointed once per snapshot
+        pair instead of re-shuffled by every query.  Lock-free: a reader
+        that raced a commit holds a pair the cache does not, and builds
+        the view for its own pair."""
+        cached = self._union_view
+        if cached is not None and cached[0] is graph and cached[1] is named:
+            return cached[2]
+        view = (graph.unionByName(named.drop("g")).dropDuplicates()
+                .localCheckpoint(eager=True))
+        self._union_view = (graph, named, view)
+        return view
 
     # -- graph access ----------------------------------------------------
 

@@ -26,6 +26,21 @@ def spark():
     yield spark
 
 
+def spark_jobs(spark, fn):
+    """``(fn(), n)``: ``n`` is the number of Spark jobs ``fn`` ran, read
+    from ``statusTracker`` under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 BOROS_TTL = """
 @prefix : <http://example.com/> .
 @prefix rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#> .

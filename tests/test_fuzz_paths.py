@@ -13,6 +13,7 @@ independent closure computed with plain Python sets.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import random
 import sys
@@ -162,12 +163,29 @@ def test_path_star_over_alternation(graphs):
             both, reflexive_nodes=nodes)
 
 
+BROADCAST = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@contextlib.contextmanager
+def distributed_loops(spark):
+    """``threshold=-1`` turns the driver tier off, so anchored closures
+    run the distributed struct loop."""
+    old = spark.conf.get(BROADCAST)
+    spark.conf.set(BROADCAST, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(BROADCAST, old)
+
+
 def test_closure_id_and_struct_representations_agree(spark):
     """Round 10: the cost-based representation choice
     (paths.CLOSURE_IDS_MIN_STEP) must be invisible to results — the same
     closure evaluated on term structs and on forced 64-bit ids returns
     identical pairs, for both the full transitive closure and the
-    anchored multi-cone BFS."""
+    anchored multi-cone BFS.  The anchored query also runs its default
+    driver tier (these steps are broadcast-sized), which must agree
+    with both distributed loops."""
     from sparkdon import paths
     from sparkdon.session import inline
 
@@ -183,16 +201,18 @@ def test_closure_id_and_struct_representations_agree(spark):
         return sorted(tuple(r[c]["lex"] for c in raw.columns)
                       for r in raw.collect())
 
+    star_driver = rows(q_star)
     old = paths.CLOSURE_IDS_MIN_STEP
     try:
-        paths.CLOSURE_IDS_MIN_STEP = 10 ** 9  # struct path
-        plus_struct, star_struct = rows(q_plus), rows(q_star)
+        with distributed_loops(spark):
+            paths.CLOSURE_IDS_MIN_STEP = 10 ** 9  # struct path
+            plus_struct, star_struct = rows(q_plus), rows(q_star)
         paths.CLOSURE_IDS_MIN_STEP = 0  # forced id path
         plus_ids, star_ids = rows(q_plus), rows(q_star)
     finally:
         paths.CLOSURE_IDS_MIN_STEP = old
     assert plus_ids == plus_struct and len(plus_struct) > 23
-    assert star_ids == star_struct and len(star_struct) > 2
+    assert star_ids == star_struct == star_driver and len(star_struct) > 2
 
 
 def test_deep_chain_closure_through_compaction(spark):
@@ -200,7 +220,8 @@ def test_deep_chain_closure_through_compaction(spark):
     ``paths._SEEN_COMPACT_LEVELS`` (24), exercising the generation-list
     compaction (the anti-join side collapses to one materialized frame
     mid-closure).  The pair set must still be the exact reference
-    closure — for the full fixpoint (p+) and the anchored BFS (p*)."""
+    closure — for the full fixpoint (p+) and the anchored BFS (p*), the
+    latter both in the driver tier and in the distributed loop."""
     from sparkdon.session import inline
 
     n = 30
@@ -212,6 +233,97 @@ def test_deep_chain_closure_through_compaction(spark):
     want = {(f"http://x.com/n{i}", f"http://x.com/n{j}")
             for i in range(n) for j in range(i + 1, n)}
     assert got == want
-    raw2 = e.select_raw("SELECT ?o { :n0 :p* ?o }")
-    got2 = {r["v_o"]["lex"] for r in raw2.collect()}
-    assert got2 == {f"http://x.com/n{i}" for i in range(n)}
+
+    def anchored():
+        raw2 = e.select_raw("SELECT ?o { :n0 :p* ?o }")
+        return {r["v_o"]["lex"] for r in raw2.collect()}
+
+    want2 = {f"http://x.com/n{i}" for i in range(n)}
+    assert anchored() == want2
+    with distributed_loops(spark):
+        assert anchored() == want2
+
+
+CYCLE_TTL = """@prefix : <http://x.com/> .
+:a :p :b . :b :p :c . :c :p :a . :d :p :b .
+:c :q "leaf" . :e :q :c .
+"""
+
+
+@pytest.fixture(scope="module")
+def cycle(spark):
+    return inline(CYCLE_TTL, spark)
+
+
+def lexes(e, q):
+    raw = e.select_raw(q)
+    return sorted(tuple(r[c]["lex"].rsplit("/", 1)[-1] for c in raw.columns)
+                  for r in raw.collect())
+
+
+@pytest.mark.parametrize("q, want", [
+    # + on a cycle that re-reaches the anchor: the anchor is in its cone
+    ("SELECT ?o { :a :p+ ?o }", [("a",), ("b",), ("c",)]),
+    # + from a node off the cycle: never re-reached, so not paired
+    ("SELECT ?o { :d :p+ ?o }", [("a",), ("b",), ("c",)]),
+    ("SELECT ?o { :d :p* ?o }", [("a",), ("b",), ("c",), ("d",)]),
+    # backward closures from a literal anchor (reversed step)
+    ('SELECT ?s { ?s (:q|:p)+ "leaf" }',
+     [("a",), ("b",), ("c",), ("d",), ("e",)]),
+    ('SELECT ?s { "leaf" (^:q)+ ?s }', [("c",), ("e",)]),
+    # two overlapping VALUES cones keep per-anchor provenance
+    ("SELECT ?s ?o { VALUES ?s { :a :d } ?s :p+ ?o }",
+     [("a", "a"), ("a", "b"), ("a", "c"),
+      ("d", "a"), ("d", "b"), ("d", "c")]),
+])
+def test_driver_tier_matches_distributed_loop(spark, cycle, monkeypatch, q, want):
+    """Broadcast-sized steps with driver-side anchors run as a Python
+    BFS (no distributed loop at all) and answer exactly what the
+    distributed struct loop answers."""
+    from sparkdon import paths
+
+    with distributed_loops(spark):
+        assert lexes(cycle, q) == want
+
+    def no_loop(*a, **k):
+        raise AssertionError("driver tier expected")
+
+    monkeypatch.setattr(paths, "_anchored_loop", no_loop)
+    assert lexes(cycle, q) == want
+
+
+def test_driver_tier_iteration_guard(spark, monkeypatch):
+    """A cone deeper than ``MAX_ITERATIONS`` levels raises in the driver
+    tier as in the loops; one level shallower converges."""
+    from sparkdon import paths
+    from sparkdon.errors import QueryExecutionError
+
+    e = inline("@prefix : <http://x.com/> .\n" + "\n".join(
+        f":n{i} :p :n{i + 1} ." for i in range(5)), spark)  # n0 .. n5
+    monkeypatch.setattr(paths, "MAX_ITERATIONS", 3)
+    with pytest.raises(QueryExecutionError, match="did not converge"):
+        e.select_raw("SELECT ?o { :n0 :p+ ?o }")
+    assert lexes(e, "SELECT ?o { :n3 :p+ ?o }") == [("n4",), ("n5",)]
+
+
+def test_anchored_closure_job_count(spark, monkeypatch):
+    """A constant-anchored ``:p+`` over a small step costs at most two
+    Spark jobs inside ``eval_path`` (the bounded step collect); the
+    per-level distributed loop ran 54 here."""
+    from sparkdon import paths
+    from tests.conftest import spark_jobs
+
+    e = inline("@prefix : <http://x.com/> .\n" + "\n".join(
+        f":n{i} :p :n{(i + 1) % 7} ." for i in range(7)), spark)
+    counts = []
+    orig = paths.eval_path
+
+    def counted(*a, **k):
+        out, n = spark_jobs(spark, lambda: orig(*a, **k))
+        counts.append(n)
+        return out
+
+    monkeypatch.setattr(paths, "eval_path", counted)
+    got = lexes(e, "SELECT ?o { :n0 :p+ ?o }")
+    assert got == [(f"n{i}",) for i in range(7)]
+    assert counts and max(counts) <= 2

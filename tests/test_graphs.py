@@ -77,6 +77,18 @@ def test_union_default_mode_sees_all_contexts(spark):
     assert len(pdf) == 3  # alice + bob + carol
 
 
+def test_union_default_view_is_built_once_per_snapshot(spark):
+    """The merged default graph is materialized once per (graph, named)
+    snapshot pair: the second query's plan holds no shuffle, and a
+    write swaps in a fresh view that sees the new triple."""
+    e = inline_trig(TRIG, spark, union_default=True)
+    e.explain("SELECT ?s WHERE { ?s ?p ?o }")
+    assert "Exchange" not in e.explain("SELECT ?s WHERE { ?s ?p ?o }")
+    e.update("INSERT DATA { :dave :age 7 }")
+    pdf = e.select("SELECT ?s ?a WHERE { ?s :age ?a }")
+    assert len(pdf) == 4 and ":dave" in set(pdf["s"])
+
+
 def test_join_across_default_and_graph(ep):
     pdf = ep.select(
         "SELECT ?w WHERE { :alice :knows ?p . GRAPH ?g { ?p :knows ?w } }")
@@ -440,6 +452,37 @@ def test_concurrent_updates_keep_every_write(spark):
         t.join(timeout=600)
     assert not any(t.is_alive() for t in threads)
     assert e.graph.filter("p = 'urn:p:round'").count() == 8
+
+
+def test_union_default_view_under_concurrent_reads_and_writes(spark):
+    """Readers build and reuse the cached union view without the write
+    lock while a writer commits: no read fails, and the first read after
+    the last commit sees every write (a view reused across snapshots
+    would miss some)."""
+    e = inline_trig(TRIG, spark, union_default=True)
+    errors = []
+    done = threading.Event()
+
+    def read() -> None:
+        try:
+            while not done.is_set():
+                e.select("SELECT ?s WHERE { ?s :age ?a }")
+        except Exception as exc:  # reported by the main thread
+            errors.append(exc)
+
+    readers = [threading.Thread(target=read) for _ in range(3)]
+    for t in readers:
+        t.start()
+    try:
+        for i in range(3):
+            e.update(f"INSERT DATA {{ :w{i} :age {i} }}")
+    finally:
+        done.set()
+        for t in readers:
+            t.join(timeout=600)
+    assert not any(t.is_alive() for t in readers)
+    assert errors == []
+    assert len(e.select("SELECT ?s WHERE { ?s :age ?a }")) == 6
 
 
 def test_graph_store_post_and_sparql_update_share_the_write_lock(spark):
