@@ -38,8 +38,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     (recursive paths, construct, dedup/ANN) land inside the window; the
     relational battery (all green in r02, and in every local
     ``scripts/check_correctness.py`` run since) goes last.  Order is kept
-    STABLE round-over-round except for ``_FRONT``: entries that have
-    never had a driver-green row are hoisted into the window.
+    STABLE round-over-round except for ``_FRONT``: every entry due for
+    re-verification (``scripts/derive_window.py``) is hoisted into the
+    window — entries that have never had a driver-green row first, then
+    those whose newest driver-green round is N-2 or older.
     """
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     try:
@@ -61,59 +63,48 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {**{k: out[k] for k in front}, **out}
 
 
-#: Entries hoisted into the driver's verification window.  Round 17 —
-#: the third battery-swap round (standing cadence; VERDICT r16 #9,
-#: executed in this round's first commit).
+#: Entries hoisted into the driver's verification window.  Round 18 —
+#: a plain rotation round (no battery swap).
 #:
 #: Freshness invariant: at end of round N, the union of windows
 #: N-2..N must cover the whole battery (no entry's newest driver-green
-#: row older than two rounds).  Recomputed from CORRECTNESS_r01..r16
-#: actuals AFTER the registry edit (``scripts/derive_window.py``):
-#: newest-green distribution before the swap was {r14: 50, r15: 50,
-#: r16: 50}.  The r17 window = the two newly registered swap entries
-#: (x_decontam_embed from pipeline/ann.py, x_chunk_stride from
-#: pipeline/packing.py — both oracled + probed since r15, in
-#: seed_sweep's permanent tiers) + the 48 r14-cohort survivors — the
-#: due 50 MINUS the retired x_lm_score/x_sim_topk (now in
-#: pipeline._registry's RETIRED tier, pytest-oracled in
-#: tests/test_retired_gates.py; x_lm_score's plan skeleton stays
-#: gated via x_lm_bigram + x_tfidf_topk, x_sim_topk's exact-refine
-#: plan via every surviving ANN gate's re-rank stage).  2 + 48 =
-#: exactly 50; after this window goes green the r15 ∪ r16 ∪ r17 union
-#: covers the post-swap 150.  This window also re-verifies every
-#: r16-optimization entry that sat OUTSIDE the r16 window (x_pagerank,
-#: x_sim_pq/ivfpq, x_sim_lsh_refined, x_semantic_dedup, x_pq_trained,
-#: q_rule_fixpoint — VERDICT r16 #3).
+#: row older than two rounds).  Derived from CORRECTNESS_r01..r17
+#: actuals (``scripts/derive_window.py``): newest-green distribution
+#: {r15: 50, r16: 50, r17: 50}, so the 50 entries whose newest green is
+#: r15 are due.  50 due = the 50-entry window: no overflow, no
+#: deferral, no free slot.  The window is exactly the due list in the
+#: script's ``(newest, key)`` order.
 #:
-#: R18 OBLIGATION (derived from actuals, assuming this window goes
-#: green): the 50 entries whose newest green is r15 (run
-#: ``scripts/derive_window.py`` at r18 start for the exact list; the
-#: tripwire test enforces it).  The cadence remains at zero slack
-#: (150 battery / 50 window / 3-round cycle): NO new gated entries may
-#: be added without retiring one.  Named r18 swap pair with complete
-#: dossiers: x_hll_union (r15) + x_dsir_weights (r16); r19 seeded with
-#: x_keep_top_approx.
+#: The named swap pair x_hll_union + x_dsir_weights is NOT registered
+#: this round: two never-green entries would make 52 due and force a
+#: deferral of two r15 entries (x_keep_top_approx stays queued behind
+#: it).  The cadence stays at zero slack (150
+#: battery / 50 window / 3-round cycle): no new gated entry may be
+#: added without retiring one.
+#:
+#: R19 OBLIGATION (derived from actuals, assuming this window goes
+#: green): the 50 entries whose newest green is r16 (run
+#: ``scripts/derive_window.py`` at r19 start for the exact list; the
+#: tripwire test enforces it).
 _FRONT = [
-    # the 2 newly registered swap entries (never driver-green → most
-    # urgent) + the 48 surviving r14-stale entries = the derived 50
-    "x_decontam_embed", "x_chunk_stride",
-    "a6_subquery_filter", "a8_bag_decollect", "j1_inner_join_chain",
-    "j2_left_outer", "j3_anti_not_exists", "j4_minus",
-    "j5_semi_exists", "q10_seq_decollect", "q_rule_fixpoint",
-    "sparql_bind_strstarts", "sparql_census_ids",
-    "sparql_census_orders", "sparql_count_distinct",
-    "sparql_join_agg_ids", "sparql_minus", "sparql_not_exists",
-    "sparql_optional", "sparql_optional_ids", "sparql_orderby_limit",
-    "sparql_path_inverse", "sparql_path_nps", "sparql_path_seq",
-    "sparql_subquery_having", "sparql_union", "sparql_values",
-    "x_boilerplate", "x_bpe_pairs", "x_char_entropy",
-    "x_cms_heavy_hitters", "x_cooccur_pmi", "x_corpus_keep",
-    "x_corpus_pack", "x_cross_dedup", "x_fingerprint_winnow",
-    "x_hll_distinct", "x_join_stream", "x_lm_bigram",
-    "x_mix_temperature", "x_pack_sequences", "x_pagerank",
-    "x_pq_trained", "x_sample_exact_k", "x_semantic_dedup",
-    "x_sim_ivfpq", "x_sim_lsh_refined", "x_sim_pq",
-    "x_split_by_cluster", "x_window_sessionize",
+    # the 50 r15-stale entries = the derived r18 due list
+    "a1_group_count", "a2_group_expr", "a3_count_distinct",
+    "a4_global_agg", "a5_group_multi_pattern", "a7_distinct",
+    "a9_multi_agg", "f3_strstarts", "f4_substr", "o1_order_asc",
+    "o2_topk_desc", "o3_order_computed", "o4_limit_topk",
+    "p1_scan_filter", "p3_constant_pushdown", "p4_projection_expr",
+    "p5_filter_compare", "p6_bool_connectives", "p7_filter_in",
+    "p8_bind", "p9_values_join", "q_decollect_seq", "sparql_ask",
+    "sparql_construct_count", "sparql_group_concat", "sparql_offset",
+    "sparql_strfuncs", "u1_union",
+    "x_asof_join", "x_bpe_encode", "x_contamination_stream",
+    "x_dedup_clusters", "x_dedup_intra", "x_dedup_minhash",
+    "x_dedup_priority", "x_dedup_stream", "x_event_lag",
+    "x_event_percentiles", "x_events_rollup", "x_fasttext_score",
+    "x_ngram_novelty", "x_pack_shard", "x_pivot_source_lang",
+    "x_sample_stratified", "x_sample_weighted", "x_text_repetition",
+    "x_topk_per_lang", "x_vocab_topk", "x_window_sliding",
+    "x_window_stream",
 ]
 
 
