@@ -44,10 +44,10 @@ from sparkdon.algebra import (
     TriplePattern, UnionGroup, UpdateRequest, ValuesClause, Var,
 )
 from sparkdon.errors import QueryExecutionError
-from sparkdon.operators.dictionary import term_id
 from sparkdon.terms import (
     XSD, BNode, IRI, KIND_BNODE, KIND_IRI, KIND_LIT, Literal, NUMERIC_DATATYPES,
-    iri_term, lit_term, make_term, named_or_empty, numeric_value, sort_key,
+    iri_term, lit_term, make_term, named_or_empty, numeric_value, scan_columns,
+    sort_key,
 )
 
 
@@ -427,86 +427,66 @@ class Compiler:
     # triple patterns
     # ------------------------------------------------------------------
 
-    def _subject_struct(self) -> Column:
-        return make_term(F.col("s_kind"), F.col("s"))
-
-    def _object_struct(self) -> Column:
-        return make_term(F.col("o_kind"), F.col("o"), F.col("o_dt"), F.col("o_lang"))
-
     def compile_pattern(self, tp: TriplePattern,
                         anchor_sets: dict | None = None,
                         prior: Bindings | None = None) -> Bindings:
         if isinstance(tp.p, Path):
             return self.compile_path_pattern(tp, anchor_sets, prior)
+        sc = scan_columns()
         df = self._pattern_frames.get(id(tp), self.triples)
-        # constant filters — these push into the Parquet scan
-        proj: dict[str, Column] = {}
-        filters: list[Column] = []
+        # constant positions: one filter per condition; Catalyst combines
+        # them into the one Filter that pushes into the Parquet scan (a
+        # single `&` conjunction would re-associate its AND tree and
+        # cost a Column call per `&`)
+        conds: list[Column] = []
+        if not isinstance(tp.s, Var):
+            if not isinstance(tp.s, (IRI, BNode)):
+                raise QueryExecutionError("literal subject in pattern")
+            conds += [sc.s_is[KIND_IRI if isinstance(tp.s, IRI) else KIND_BNODE],
+                      sc.s == str(tp.s)]
+        if not isinstance(tp.p, Var):
+            conds.append(sc.p == str(tp.p))
+        if isinstance(tp.o, (IRI, BNode)):
+            conds += [sc.o_is[KIND_IRI if isinstance(tp.o, IRI) else KIND_BNODE],
+                      sc.o == str(tp.o)]
+        elif not isinstance(tp.o, Var):
+            conds += [sc.o_is[KIND_LIT], sc.o == tp.o.lex,
+                      sc.o_dt == tp.o.datatype if tp.o.datatype else sc.o_dt_null,
+                      sc.o_lang == tp.o.lang if tp.o.lang else sc.o_lang_null]
+        for c in conds:
+            df = df.filter(c)
 
-        late_slots: list[tuple[str, Column, Column]] = []
-
-        def handle(term, struct_col: Column, id_col: Column, flat_eq):
-            nonlocal df
-            if isinstance(term, Var):
-                if term.name in self.late:
-                    col = id_col
-                    late_slots.append((term.name, id_col, struct_col))
-                else:
-                    col = id_col if term.name in self.id_only else struct_col
-                if term.name in proj:  # repeated var in one pattern
-                    filters.append(proj[term.name].eqNullSafe(col))
-                else:
-                    proj[term.name] = col
-            else:
-                for c in flat_eq(term):
-                    df = df.filter(c)
-
-        def s_eq(term):
-            if isinstance(term, IRI):
-                return [F.col("s_kind") == KIND_IRI, F.col("s") == str(term)]
-            if isinstance(term, BNode):
-                return [F.col("s_kind") == KIND_BNODE, F.col("s") == str(term)]
-            raise QueryExecutionError("literal subject in pattern")
-
-        def p_eq(term):
-            return [F.col("p") == str(term)]
-
-        def o_eq(term):
-            if isinstance(term, IRI):
-                return [F.col("o_kind") == KIND_IRI, F.col("o") == str(term)]
-            if isinstance(term, BNode):
-                return [F.col("o_kind") == KIND_BNODE, F.col("o") == str(term)]
-            cs = [F.col("o_kind") == KIND_LIT, F.col("o") == term.lex]
-            cs.append(
-                F.col("o_dt") == term.datatype if term.datatype else F.col("o_dt").isNull()
-            )
-            cs.append(F.col("o_lang") == term.lang if term.lang else F.col("o_lang").isNull())
-            return cs
-
-        handle(tp.s, self._subject_struct(),
-               term_id(F.col("s_kind"), F.col("s")), s_eq)
-        handle(tp.p, iri_term(F.col("p")),
-               term_id(F.lit(KIND_IRI), F.col("p")), p_eq)
-        handle(tp.o, self._object_struct(),
-               term_id(F.col("o_kind"), F.col("o"), F.col("o_dt"), F.col("o_lang")),
-               o_eq)
+        # var positions: only the representation each var needs — a late
+        # var's id rides the joins and its struct feeds the decode relation
+        slots = [(tp.s, sc.s_term, sc.s_id), (tp.p, sc.p_term, sc.p_id),
+                 (tp.o, sc.o_term, sc.o_id)]
         if self.graph_var is not None:
             # inside GRAPH ?g: every pattern scan additionally binds the
-            # graph name; handle() reuses the repeated-var equality when
-            # ?g also occupies an s/p/o position of this pattern
-            handle(Var(self.graph_var), iri_term(F.col("g")),
-                   term_id(F.lit(KIND_IRI), F.col("g")), None)
-
-        # decode relations for late-materialized vars: exactly this
-        # pattern's (constant-filtered, hence pushdown-pruned) scan,
-        # projected to (id, struct) — unioned per var and deduped at the
-        # final decode join in compile_select
-        for name, id_col, struct_col in late_slots:
-            self._decode_src.setdefault(name, []).append(
-                df.select(id_col.alias("__tid"), struct_col.alias("__term")))
+            # graph name (a repeat when ?g also sits in an s/p/o position)
+            slots.append((Var(self.graph_var), sc.g_term, sc.g_id))
+        proj: dict[str, Column] = {}
+        repeats: list[Column] = []
+        for term, struct_col, id_col in slots:
+            if not isinstance(term, Var):
+                continue
+            name = term.name
+            if name in self.late:
+                col = id_col
+                # decode relation: exactly this pattern's (constant-
+                # filtered, hence pushdown-pruned) scan, projected to
+                # (id, struct) — unioned per var and deduped at the final
+                # decode join in compile_select
+                self._decode_src.setdefault(name, []).append(
+                    df.select(id_col.alias("__tid"), struct_col.alias("__term")))
+            else:
+                col = id_col if name in self.id_only else struct_col
+            if name in proj:  # repeated var in one pattern
+                repeats.append(proj[name].eqNullSafe(col))
+            else:
+                proj[name] = col
 
         out = df.select(*[c.alias(vcol(n)) for n, c in proj.items()])
-        for f in filters:
+        for f in repeats:
             out = out.filter(f)
         names = list(proj.keys())
         return Bindings(out, names, set(names))
@@ -1139,7 +1119,7 @@ class Compiler:
                 self.graph_var = el.term.name
             else:
                 self.triples = named.filter(
-                    F.col("g") == str(el.term)).drop("g")
+                    scan_columns().g == str(el.term)).drop("g")
                 self.graph_var = None
             out = self.compile_group(el.group)
         finally:
@@ -1150,7 +1130,7 @@ class Compiler:
             # binding ?g to each distinct graph name
             gname = el.term.name
             graphs = Bindings(
-                named.select(iri_term(F.col("g")).alias(vcol(gname))).distinct(),
+                named.select(scan_columns().g_term.alias(vcol(gname))).distinct(),
                 [gname], {gname})
             out = self.join(graphs, out)
         return out

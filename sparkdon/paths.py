@@ -48,7 +48,7 @@ from sparkdon.errors import QueryExecutionError
 # shared threshold parser (moved to sizing.py in r17 so the PageRank
 # loop's copy cannot drift); old private name kept for in-repo callers
 from sparkdon.sizing import broadcast_threshold_bytes as _broadcast_threshold_bytes
-from sparkdon.terms import BNode, IRI, KIND_BNODE, KIND_IRI, KIND_LIT, Literal, make_term
+from sparkdon.terms import BNode, IRI, KIND_BNODE, KIND_IRI, KIND_LIT, Literal, scan_columns
 
 #: iteration guard for runaway graphs; each iteration is one BFS level, so
 #: this bounds path length, not data size.
@@ -56,11 +56,9 @@ MAX_ITERATIONS = 200
 
 
 def _pairs_for_link(compiler, iri: IRI) -> DataFrame:
-    t = compiler.triples.filter(F.col("p") == str(iri))
-    return t.select(
-        make_term(F.col("s_kind"), F.col("s")).alias("start"),
-        make_term(F.col("o_kind"), F.col("o"), F.col("o_dt"), F.col("o_lang")).alias("end"),
-    )
+    sc = scan_columns()
+    t = compiler.triples.filter(sc.p == str(iri))
+    return t.select(sc.s_term.alias("start"), sc.o_term.alias("end"))
 
 
 def _const_struct_row(term):
@@ -102,19 +100,14 @@ def eval_pairs(compiler, path) -> DataFrame:
         # is one predicate NOT-IN filter over the triple scan.
         fwd, inv = path.parts
         t = compiler.triples
+        sc = scan_columns()
         outs = []
         if fwd or not inv:  # `!()` matches every forward triple
-            tf = t.filter(~F.col("p").isin([str(i) for i in fwd])) if fwd else t
-            outs.append(tf.select(
-                make_term(F.col("s_kind"), F.col("s")).alias("start"),
-                make_term(F.col("o_kind"), F.col("o"), F.col("o_dt"),
-                          F.col("o_lang")).alias("end")))
+            tf = t.filter(~sc.p.isin([str(i) for i in fwd])) if fwd else t
+            outs.append(tf.select(sc.s_term.alias("start"), sc.o_term.alias("end")))
         if inv:
-            ti = t.filter(~F.col("p").isin([str(i) for i in inv]))
-            outs.append(ti.select(
-                make_term(F.col("o_kind"), F.col("o"), F.col("o_dt"),
-                          F.col("o_lang")).alias("start"),
-                make_term(F.col("s_kind"), F.col("s")).alias("end")))
+            ti = t.filter(~sc.p.isin([str(i) for i in inv]))
+            outs.append(ti.select(sc.o_term.alias("start"), sc.s_term.alias("end")))
         out = outs[0]
         for o in outs[1:]:
             out = out.unionByName(o)
@@ -145,11 +138,9 @@ def eval_pairs(compiler, path) -> DataFrame:
 def all_nodes(compiler) -> DataFrame:
     """Every term occurring in the graph (zero-length path domain)."""
     t = compiler.triples
-    subs = t.select(make_term(F.col("s_kind"), F.col("s")).alias("node"))
-    objs = t.select(
-        make_term(F.col("o_kind"), F.col("o"), F.col("o_dt"), F.col("o_lang")).alias("node")
-    )
-    return subs.unionByName(objs).distinct()
+    sc = scan_columns()
+    return (t.select(sc.s_term.alias("node"))
+            .unionByName(t.select(sc.o_term.alias("node"))).distinct())
 
 
 def _retire(df: DataFrame | None) -> None:

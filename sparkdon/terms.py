@@ -24,9 +24,12 @@ import datetime
 import decimal
 from typing import Any
 
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from sparkdon.operators.dictionary import term_id
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -161,11 +164,66 @@ def make_term(kind: Column | str, lex: Column, dt: Column | None = None,
     """Build a term struct Column from components."""
     if isinstance(kind, str):
         kind = F.lit(kind)
-    dt = dt if dt is not None else F.lit(None).cast("string")
-    lang = lang if lang is not None else F.lit(None).cast("string")
+    if dt is None or lang is None:
+        null = scan_columns().null
+        dt = null if dt is None else dt
+        lang = null if lang is None else lang
     return F.struct(
         kind.alias("kind"), lex.alias("lex"), dt.alias("dt"), lang.alias("lang")
     )
+
+
+class ScanColumns:
+    """The Columns a triple-pattern scan is compiled from, over the
+    flattened triple layout (plus the quad store's ``g``): the raw
+    columns, each position's term struct and 64-bit ``term_id``, the
+    kind guards (``s_is[KIND_IRI]`` is ``s_kind = 'iri'``), the
+    ``o_dt``/``o_lang`` IS NULL guards and the NULL string literal.
+
+    Compile cost model: under PySpark 4 every API call that builds a
+    Column (``F.col``, ``F.lit``, ``.cast``, ``.alias``, ``==``,
+    ``F.struct``, ...) costs 9 to 13 py4j round trips, so one term
+    struct costs 55 to 110 and one ``term_id`` about 50.  None of these
+    depends on the query, so :func:`scan_columns` builds them once per
+    SparkContext and every compile, on every thread, shares them: a
+    Column is an immutable expression, resolved afresh by each plan it
+    is used in.
+    """
+
+    def __init__(self) -> None:
+        self.null = null = F.lit(None).cast("string")
+        (self.s_kind, self.s, self.p, self.o_kind, self.o, self.o_dt,
+         self.o_lang, self.g) = (F.col(c) for c in QUAD_SCHEMA.fieldNames())
+        iri = F.lit(KIND_IRI)
+        self.s_term = make_term(self.s_kind, self.s, null, null)
+        self.p_term = make_term(iri, self.p, null, null)
+        self.o_term = make_term(self.o_kind, self.o, self.o_dt, self.o_lang)
+        self.g_term = make_term(iri, self.g, null, null)
+        self.s_id = term_id(self.s_kind, self.s, null, null)
+        self.p_id = term_id(iri, self.p, null, null)
+        self.o_id = term_id(self.o_kind, self.o, self.o_dt, self.o_lang)
+        self.g_id = term_id(iri, self.g, null, null)
+        self.s_is = {k: self.s_kind == k for k in (KIND_IRI, KIND_BNODE)}
+        self.o_is = {k: self.o_kind == k for k in (KIND_IRI, KIND_BNODE, KIND_LIT)}
+        self.o_dt_null = self.o_dt.isNull()
+        self.o_lang_null = self.o_lang.isNull()
+
+
+#: ``(SparkContext, ScanColumns)`` of the last :func:`scan_columns` call
+_scan: tuple = (None, None)
+
+
+def scan_columns() -> ScanColumns:
+    """The shared :class:`ScanColumns` of the active SparkContext, built
+    on first use and rebuilt when the context changes.  Two threads that
+    race the first build each get a complete set; the last one is kept."""
+    global _scan
+    sc = SparkContext._active_spark_context
+    built_for, cols = _scan
+    if cols is None or built_for is not sc:
+        cols = ScanColumns()
+        _scan = (sc, cols)
+    return cols
 
 
 def iri_term(lex: Column | str) -> Column:

@@ -41,6 +41,33 @@ def spark_jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def py4j_round_trips(fn):
+    """``(fn(), n)``: ``n`` is the number of py4j round trips (Python ->
+    JVM commands) ``fn`` sent from the calling thread, counted by
+    wrapping ``ClientServerConnection.send_command``.  py4j's own
+    finalizer thread, which releases collected JVM references in
+    batches whenever it runs, and every other thread are not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    caller = threading.get_ident()
+    n = 0
+
+    def counting(self, *args, **kwargs):
+        nonlocal n
+        n += threading.get_ident() == caller
+        return send(self, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        out = fn()
+    finally:
+        ClientServerConnection.send_command = send
+    return out, n
+
+
 BOROS_TTL = """
 @prefix : <http://example.com/> .
 @prefix rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#> .

@@ -8,6 +8,7 @@ import collections
 import pytest
 
 from sparkdon.session import LocalEndpoint, inline, member, one
+from sparkdon.terms import IRI
 from tests.conftest import BOROS_TTL, LAURIE_TTL, RACES_TTL, SCHEMA_TTL, SEQ11_TTL
 
 
@@ -609,3 +610,112 @@ def test_update_operation_sequence(spark):
     assert e.count() == 1
     df = e.select("SELECT ?w { :x :doubled ?w }")
     assert list(df["w"]) == [1]
+
+
+#: a two-customer slice of the benchmark graph's lookup shapes
+LOOKUP_TTL = """
+@prefix p: <urn:p:> .
+<urn:g:customer:1> p:c_name "Customer#1" ; p:c_acctbal 12.5 ; p:c_mktsegment "BUILDING" ;
+    p:c_nationkey <urn:g:nation:3> ; p:locatedIn <urn:g:nation:3> .
+<urn:g:customer:2> p:c_name "Customer#2" ; p:c_acctbal -7.25 ; p:c_mktsegment "MACHINERY" ;
+    p:c_nationkey <urn:g:nation:4> ; p:locatedIn <urn:g:nation:4> .
+<urn:g:nation:3> p:n_name "FRANCE" ; p:n_regionkey <urn:g:region:1> ; p:locatedIn <urn:g:region:1> .
+<urn:g:nation:4> p:n_name "JAPAN" ; p:n_regionkey <urn:g:region:2> ; p:locatedIn <urn:g:region:2> .
+<urn:g:region:1> p:r_name "EUROPE" .
+<urn:g:region:2> p:r_name "ASIA" .
+<urn:g:orders:7> p:o_custkey <urn:g:customer:1> ; p:o_totalprice 99.5 ; p:o_orderstatus "F" .
+<urn:g:orders:8> p:o_custkey <urn:g:customer:1> ; p:o_totalprice 12.0 ; p:o_orderstatus "O" .
+<urn:g:orders:9> p:o_custkey <urn:g:customer:2> ; p:o_totalprice 40.0 ; p:o_orderstatus "P" .
+"""
+
+#: the SELECT lookup templates of the benchmark (perfbench/workloads.py)
+LOOKUPS = {
+    "attrs": "SELECT ?name ?bal ?seg WHERE { ?_c p:c_name ?name ; "
+             "p:c_acctbal ?bal ; p:c_mktsegment ?seg }",
+    "orders": "SELECT ?o ?price WHERE { ?o p:o_custkey ?_c ; p:o_totalprice ?price }",
+    "geo": "SELECT ?nname ?rname WHERE { ?_c p:c_nationkey ?n . ?n p:n_name ?nname ; "
+           "p:n_regionkey ?r . ?r p:r_name ?rname }",
+    "path": "SELECT ?r WHERE { ?_c p:locatedIn+ ?r }",
+}
+
+
+def _lookup_endpoint(spark, use_ids=False):
+    e = inline(LOOKUP_TTL, spark)
+    e.bind("p", "urn:p:")
+    e.use_ids = use_ids
+    return e
+
+
+def _customer(i):
+    return {"c": IRI(f"urn:g:customer:{i}")}
+
+
+def _rows(df):
+    return sorted(map(repr, df.to_dict("records")))
+
+
+def test_pattern_compile_round_trips(spark):
+    """A selective lookup compiles in a few hundred py4j round trips: the
+    triple-scan term structs, term ids and guards are built once per
+    SparkContext (``terms.scan_columns``) and each pattern takes only the
+    Columns its variables need.  Rebuilding them for every pattern cost
+    2,115 / 1,323 / 2,557 round trips for these compiles."""
+    from tests.conftest import py4j_round_trips
+
+    rebuilt = {"attrs": 2115, "orders": 1323, "geo": 2557}
+    e = _lookup_endpoint(spark)
+    for name, limit in rebuilt.items():
+        q, b = LOOKUPS[name], _customer(1)
+        e.select_raw(q, b)  # warm: parse cache and the shared Columns
+        _, n = py4j_round_trips(lambda: e.select_raw(q, b))
+        assert n <= limit // 3, f"{name}: {n} round trips to compile"
+
+
+def test_scan_columns_shared_across_threads(spark):
+    """The scan Columns are shared state: four threads start from an
+    empty cache and compile and run different lookups on one endpoint;
+    every answer equals the single-threaded one.  The set is rebuilt
+    only when the SparkContext changes."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from sparkdon import terms
+
+    e = _lookup_endpoint(spark)
+    work = [(LOOKUPS[name], _customer(1 + i % 2))
+            for i, name in enumerate(("attrs", "orders", "geo", "path"))]
+    expected = [_rows(e.select(q, b)) for q, b in work]
+    assert all(expected)
+    terms._scan = (None, None)
+    barrier = threading.Barrier(len(work))
+
+    def run(i):
+        q, b = work[i]
+        barrier.wait(timeout=60)
+        return [_rows(e.select(q, b)) for _ in range(2)]
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(len(work)) as pool:
+            got = list(pool.map(run, range(len(work)), timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [[rows, rows] for rows in expected]
+
+    cols = terms.scan_columns()
+    assert terms.scan_columns() is cols
+    terms._scan = (object(), cols)  # as if built for another context
+    assert terms.scan_columns() is not cols
+
+
+def test_scan_columns_keep_join_only_vars_as_ids(spark):
+    """``use_ids`` still carries the join-only ``?n`` and ``?r`` of the
+    geo lookup as ``xxhash64`` term ids, with the same answers."""
+    off, on = _lookup_endpoint(spark), _lookup_endpoint(spark, use_ids=True)
+    q, b = LOOKUPS["geo"], _customer(2)
+    assert "xxhash64" in on.explain(q, b, mode="simple")
+    assert "xxhash64" not in off.explain(q, b, mode="simple")
+    assert _rows(on.select(q, b)) == _rows(off.select(q, b)) == [
+        repr({"nname": "JAPAN", "rname": "ASIA"})]
