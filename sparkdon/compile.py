@@ -46,8 +46,8 @@ from sparkdon.algebra import (
 from sparkdon.errors import QueryExecutionError
 from sparkdon.terms import (
     XSD, BNode, IRI, KIND_BNODE, KIND_IRI, KIND_LIT, Literal, NUMERIC_DATATYPES,
-    iri_term, lit_term, make_term, named_or_empty, numeric_value, scan_columns,
-    sort_key,
+    iri_term, lit_term, local_frame, make_term, named_or_empty, numeric_value,
+    scan_columns, sort_key, term_schema,
 )
 
 
@@ -1184,10 +1184,7 @@ class Compiler:
                 else:
                     enc.append((KIND_LIT, term.lex, term.datatype, term.lang))
             rows.append(tuple(enc))
-        schema = ", ".join(
-            f"{vcol(n)} struct<kind:string,lex:string,dt:string,lang:string>" for n in names
-        )
-        df = self.spark.createDataFrame(rows, schema)
+        df = local_frame(self.spark, rows, term_schema(vcol(n) for n in names))
         certain = {
             n for i, n in enumerate(names) if all(r[i] is not None for r in rows)
         }
@@ -1359,7 +1356,7 @@ class Compiler:
             # head/results keys) count as a failed service execution that
             # SILENT degrades to the unit solution (spec §18.3.1).  A
             # driver-side defect while materializing the frame (e.g. a
-            # Spark createDataFrame error) raises other types and must
+            # JVM error building it) raises other types and must
             # surface, SILENT or not — local bugs are not remote failures.
             if el.silent:
                 logger.debug("SERVICE SILENT <%s>: malformed results "
@@ -1370,10 +1367,7 @@ class Compiler:
                 f"document: {type(exc).__name__}: {exc}") from exc
 
     def _empty_struct_frame(self, names: list[str]) -> DataFrame:
-        schema = ", ".join(
-            f"{vcol(n)} struct<kind:string,lex:string,dt:string,lang:string>"
-            for n in names)
-        return self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, [], term_schema(vcol(n) for n in names))
 
     def _service_bindings(self, doc: dict) -> Bindings:
         names = list(doc.get("head", {}).get("vars", []))
@@ -1404,11 +1398,9 @@ class Compiler:
                     rec.append((KIND_LIT, node["value"],
                                 node.get("datatype"), node.get("xml:lang")))
             data.append(tuple(rec))
-        schema = ", ".join(
-            f"{vcol(n)} struct<kind:string,lex:string,dt:string,lang:string>"
-            for n in names)
-        return Bindings(self.spark.createDataFrame(data, schema),
-                        names, bound_everywhere)
+        return Bindings(
+            local_frame(self.spark, data, term_schema(vcol(n) for n in names)),
+            names, bound_everywhere)
 
     def apply_filter(self, bindings: Bindings, expr: Expr) -> Bindings:
         if (isinstance(expr, OpExpr) and expr.op == "&&"
@@ -1578,7 +1570,7 @@ class Compiler:
         if kind == "term":
             return numeric_value(col)
         if kind == "str":
-            return col.cast("double")
+            return col.try_cast("double")
         if kind == "bool":
             return col.cast("double")
         raise QueryExecutionError(f"cannot coerce {kind} to number")
@@ -1711,7 +1703,10 @@ class Compiler:
                     .otherwise(F.lit(None).cast("boolean")))
         if op in ("+", "-", "*", "/"):
             na, nb = self.as_num(a), self.as_num(b)
-            col = {"+": na + nb, "-": na - nb, "*": na * nb, "/": na / nb}[op]
+            # try_divide: division by zero is a SPARQL error (unbound),
+            # not a failed query
+            col = {"+": na + nb, "-": na - nb, "*": na * nb,
+                   "/": F.try_divide(na, nb)}[op]
             hints = {v[2] if len(v) > 2 else None for v in (a, b)}
             if hints == {"integer"} and op != "/":
                 return ("num", col, "integer")
@@ -1763,9 +1758,9 @@ class Compiler:
                     .otherwise(F.lit("")))
         if name == "SUBSTR":
             s = self.as_str(args[0])
-            pos = self.as_num(args[1]).cast("int")
+            pos = self.as_num(args[1]).try_cast("int")
             if len(args) > 2:
-                return ("str", s.substr(pos, self.as_num(args[2]).cast("int")))
+                return ("str", s.substr(pos, self.as_num(args[2]).try_cast("int")))
             return ("str", s.substr(pos, F.lit(2 ** 30)))
         if name == "STRLEN":
             return ("num", F.length(self.as_str(args[0])).cast("double"), "integer")
@@ -1875,11 +1870,15 @@ class Compiler:
         if name.startswith(XSD):
             local = name[len(XSD):]
             s = self.as_str(args[0])
+            # try_cast: a lexical form the cast rejects is a SPARQL
+            # error (the variable stays unbound), never a failed query,
+            # whatever order Catalyst evaluates BIND and FILTER in
             if local in ("integer", "long", "int", "short", "byte"):
-                n = F.coalesce(s.cast("long"), s.cast("double").cast("long"))
+                n = F.coalesce(s.try_cast("long"),
+                               s.try_cast("double").try_cast("long"))
                 return ("num", n.cast("double"), "integer")
             if local in ("double", "float", "decimal"):
-                return ("num", s.cast("double"))
+                return ("num", s.try_cast("double"))
             if local == "boolean":
                 return ("bool", s.isin("true", "1"))
             if local == "string":
@@ -2340,4 +2339,4 @@ class Compiler:
         if self.use_ids and not self._analyzed:
             self._analyzed = True
             self.id_only, self.late = self._analyze_id_vars(q)
-        return self.compile_group(q.where).df.limit(1).count() > 0
+        return not self.compile_group(q.where).df.isEmpty()

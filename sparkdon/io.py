@@ -24,7 +24,8 @@ from pyspark.sql import functions as F
 from sparkdon.algebra import Parser
 from sparkdon.errors import SparkdonError
 from sparkdon.terms import (
-    KIND_BNODE, KIND_IRI, KIND_LIT, TRIPLE_SCHEMA, BNode, IRI, Literal, XSD,
+    KIND_BNODE, KIND_IRI, KIND_LIT, QUAD_SCHEMA, TRIPLE_SCHEMA, BNode, IRI,
+    Literal, XSD, local_frame,
 )
 
 # ---------------------------------------------------------------------------
@@ -275,16 +276,37 @@ def parse_trig(text: str, prefixes: dict | None = None) -> tuple[list, list]:
     return TriGParser(text, prefixes).parse_quads_document()
 
 
+#: A driver-built store of at least this many rows is held checkpointed,
+#: as every written snapshot is, instead of as a ``LocalRelation``: the
+#: analyzer and optimizer walk a ``LocalRelation``'s rows in rule after
+#: rule of every query over it.  On a 4-core host a checkpointed store
+#: answered a four-pattern BGP in 0.48 s against 0.52 s at 11k triples,
+#: 0.63 s against 1.41 s at 101k and 0.66 s against 3.3 s at 251k;
+#: at 3.5k triples the two were even.
+STORE_CHECKPOINT_ROWS = 10_000
+
+
+def _store(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
+    rows = list(dict.fromkeys(rows))
+    df = local_frame(spark, rows, schema)
+    if len(rows) >= STORE_CHECKPOINT_ROWS:
+        return df.localCheckpoint(eager=True)
+    return df
+
+
 def triples_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:
-    """Materialize triple rows as a DataFrame with graph set semantics."""
-    return spark.createDataFrame(rows, TRIPLE_SCHEMA).dropDuplicates()
+    """Materialize triple rows as a DataFrame with graph set semantics:
+    the rows (tuples of str/None) are deduplicated on the driver, so
+    the frame is already a set and no query over it pays a distinct
+    aggregate.  A :data:`STORE_CHECKPOINT_ROWS`-row or larger frame is
+    checkpointed once; a smaller one stays a ``LocalRelation``."""
+    return _store(spark, rows, TRIPLE_SCHEMA)
 
 
 def quads_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:
-    """Materialize (triple + graph IRI) rows as a named-graph store."""
-    from sparkdon.terms import QUAD_SCHEMA
-
-    return spark.createDataFrame(rows, QUAD_SCHEMA).dropDuplicates()
+    """Materialize (triple + graph IRI) rows as a named-graph store, a
+    set like :func:`triples_df`."""
+    return _store(spark, rows, QUAD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -22,8 +22,9 @@ its step relation (:func:`anchored_closure`):
 - **driver** — the anchors are a term list on the driver (constant
   endpoints, all-constant ``VALUES``) and the step has fewer than
   :data:`CLOSURE_IDS_MIN_STEP` rows and a measured byte estimate within
-  ``spark.sql.autoBroadcastJoinThreshold``: the step is collected once
-  (one bounded job) and walked in Python.  At that size every
+  ``spark.sql.autoBroadcastJoinThreshold``: the step is fetched once as
+  Arrow (one bounded job) and walked in Python, and the result goes
+  back to the JVM as an Arrow ``LocalRelation``.  At that size every
   distributed BFS level would broadcast the whole step anyway.
 - **struct loop** — the distributed BFS on term structs, for anchor
   DataFrames (sideways information passing, ``GRAPH ?g``) and for steps
@@ -48,7 +49,10 @@ from sparkdon.errors import QueryExecutionError
 # shared threshold parser (moved to sizing.py in r17 so the PageRank
 # loop's copy cannot drift); old private name kept for in-repo callers
 from sparkdon.sizing import broadcast_threshold_bytes as _broadcast_threshold_bytes
-from sparkdon.terms import BNode, IRI, KIND_BNODE, KIND_IRI, KIND_LIT, Literal, scan_columns
+from sparkdon.terms import (
+    BNode, IRI, KIND_BNODE, KIND_IRI, KIND_LIT, Literal, local_frame, scan_columns,
+    term_schema,
+)
 
 #: iteration guard for runaway graphs; each iteration is one BFS level, so
 #: this bounds path length, not data size.
@@ -69,9 +73,6 @@ def _const_struct_row(term):
     if isinstance(term, Literal):
         return (KIND_LIT, term.lex, term.datatype, term.lang)
     raise QueryExecutionError(f"bad path anchor {term!r}")
-
-
-TERM_STRUCT_DDL = "struct<kind:string,lex:string,dt:string,lang:string>"
 
 
 def eval_pairs(compiler, path) -> DataFrame:
@@ -164,10 +165,14 @@ def _retire(df: DataFrame | None) -> None:
 
 def _is_checkpoint(df: DataFrame) -> bool:
     """Whether ``df`` reads straight off checkpointed blocks: its
-    analyzed plan is a ``LogicalRDD`` over a checkpointed RDD (a frame
-    made by ``createDataFrame`` is a ``LogicalRDD`` too, but recomputes).
-    Best-effort like :func:`_retire`: an unreadable plan counts as not
-    checkpointed."""
+    analyzed plan is a ``LogicalRDD`` over a checkpointed RDD.  A frame
+    of driver rows (:func:`~sparkdon.terms.local_frame`, e.g. a small
+    ``inline()`` graph) is a ``LocalRelation``, or above Spark's local
+    relation threshold a ``LogicalRDD`` over an uncheckpointed Arrow RDD,
+    so it does not count; a driver-built store of
+    :data:`~sparkdon.io.STORE_CHECKPOINT_ROWS` rows or more is
+    checkpointed and does.  Best-effort like :func:`_retire`: an
+    unreadable plan counts as not checkpointed."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         return (plan.getClass().getSimpleName() == "LogicalRDD"
@@ -428,34 +433,40 @@ def _closure_loop(step: DataFrame, n_rows: int | None = None,
 
 
 def _collect_small_step(step: DataFrame):
-    """The step's rows when the driver tier may take it, else None.
+    """The step's ``(start, end)`` pairs of ``(kind, lex, dt, lang)``
+    tuples when the driver tier may take it, else None.
 
     The tier needs fewer than :data:`CLOSURE_IDS_MIN_STEP` rows (the id
     bar is checked first, so forcing it to 0 keeps the id loop) and a
     :func:`_step_stats`-style byte estimate within the broadcast
     threshold.  Every row costs at least the per-row overhead, so no
     step over ``threshold / overhead`` rows can fit: one bounded
-    ``limit(cap + 1).collect()`` both sizes the step and fetches it,
-    and the estimate is summed on the driver."""
+    ``limit(cap + 1).toArrow()`` both sizes the step and fetches it as
+    Arrow columns (no per-row ``Row`` objects), and the estimate is
+    summed on the driver."""
     thr = _broadcast_threshold_bytes(step.sparkSession)
     cap = min(thr // _BCAST_BYTES_STRUCT_ROW_OVERHEAD,
               CLOSURE_IDS_MIN_STEP - 1)
     if thr <= 0 or cap < 0:  # broadcasts off, or the id loop forced
         return None
-    rows = step.limit(cap + 1).collect()
-    if len(rows) > cap:
+    table = step.limit(cap + 1).toArrow()
+    if table.num_rows > cap:
         return None
-    chars = sum(len(f) for r in rows for term in r for f in term[1:]
+    pairs = list(zip(*([tuple(t.values()) for t in table.column(i).to_pylist()]
+                       for i in (0, 1))))
+    chars = sum(len(f) for pair in pairs for term in pair for f in term[1:]
                 if f is not None)
-    if len(rows) * _BCAST_BYTES_STRUCT_ROW_OVERHEAD + 2 * chars > thr:
+    if len(pairs) * _BCAST_BYTES_STRUCT_ROW_OVERHEAD + 2 * chars > thr:
         return None
-    return rows
+    return pairs
 
 
-def _driver_closure(spark, rows, anchors: list, forward: bool,
+def _driver_closure(spark, pairs, anchors: list, forward: bool,
                     include_zero: bool) -> DataFrame:
-    """The driver tier: per-anchor BFS over the collected step rows,
-    returned as one local (anchor, node) term-struct DataFrame.
+    """The driver tier: per-anchor BFS over the collected step pairs,
+    returned as one (anchor, node) term-struct
+    :func:`~sparkdon.terms.local_frame`, so later jobs over the result
+    read a ``LocalRelation`` in the JVM and start no Python worker.
 
     Same semantics as :func:`_anchored_loop`: ``include_zero`` pairs
     every anchor with itself; otherwise an anchor pairs with itself only
@@ -463,8 +474,7 @@ def _driver_closure(spark, rows, anchors: list, forward: bool,
     step, and a cone still growing after :data:`MAX_ITERATIONS` levels
     raises."""
     adj: dict[tuple, set] = {}
-    for r in rows:
-        a, b = tuple(r[0]), tuple(r[1])
+    for a, b in pairs:
         if not forward:
             a, b = b, a
         adj.setdefault(a, set()).add(b)
@@ -490,8 +500,7 @@ def _driver_closure(spark, rows, anchors: list, forward: bool,
         if not (include_zero or cycle):
             seen.discard(anchor)
         out.extend((anchor, node) for node in seen)
-    return spark.createDataFrame(
-        out, f"anchor {TERM_STRUCT_DDL}, node {TERM_STRUCT_DDL}")
+    return local_frame(spark, out, term_schema(("anchor", "node")))
 
 
 def anchored_closure(spark, step: DataFrame, anchors,
@@ -504,8 +513,8 @@ def anchored_closure(spark, step: DataFrame, anchors,
 
     - **driver** (:func:`_driver_closure`): list anchors and a step
       under :data:`CLOSURE_IDS_MIN_STEP` rows whose byte estimate fits
-      the broadcast threshold — one bounded collect, a Python BFS, a
-      local result frame;
+      the broadcast threshold — one bounded Arrow fetch, a Python BFS,
+      a ``LocalRelation`` result frame;
     - **id loop**: steps of at least :data:`CLOSURE_IDS_MIN_STEP` raw
       rows — the BFS frontier carries (anchor_id, node_id) long pairs,
       16 bytes per row through every per-level shuffle, and the final
@@ -516,13 +525,12 @@ def anchored_closure(spark, step: DataFrame, anchors,
     the measured count AND byte estimate also feed the loop's step-side
     broadcast pick (:func:`_step_join_side`)."""
     if not isinstance(anchors, DataFrame):
-        rows = _collect_small_step(step)
-        if rows is not None:
-            return _driver_closure(spark, rows, anchors, forward,
+        pairs = _collect_small_step(step)
+        if pairs is not None:
+            return _driver_closure(spark, pairs, anchors, forward,
                                    include_zero)
-        anchors = spark.createDataFrame(
-            [(_const_struct_row(t),) for t in anchors],
-            f"node {TERM_STRUCT_DDL}")
+        anchors = local_frame(spark, [(_const_struct_row(t),) for t in anchors],
+                              term_schema(("node",)))
     n_raw = bytes_raw = None
     if CLOSURE_IDS:
         n_raw, bytes_raw = _step_stats(step)

@@ -20,6 +20,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sparkdon import io as io_mod
 from sparkdon.algebra import (
@@ -30,9 +31,13 @@ from sparkdon.compile import Compiler
 from sparkdon.errors import SparkdonError, one_error
 from sparkdon.paths import fixpoint_union
 from sparkdon.terms import (
-    KIND_BNODE, KIND_IRI, QUAD_SCHEMA, RDF, BNode, IRI, n3, named_or_empty,
+    KIND_BNODE, KIND_IRI, RDF, BNode, IRI, local_frame, n3, named_or_empty,
     to_python,
 )
+
+#: the ``(f_kind, f)`` node relation a CBD traversal starts from
+_NODE_SCHEMA = T.StructType([T.StructField("f_kind", T.StringType()),
+                             T.StructField("f", T.StringType())])
 
 #: regex for substitutable variables ``?_x`` / ``$_x``
 #: (mirrors gastrodon/__init__.py:42-45)
@@ -739,9 +744,9 @@ class LocalEndpoint(Endpoint):
         commit whatever number of graphs the blocks name."""
 
         def quads(pairs):
-            return self.spark.createDataFrame(
-                [io_mod._encode_triple(t.s, t.p, t.o) + (str(g),)
-                 for g, t in pairs], QUAD_SCHEMA) if pairs else None
+            return io_mod.quads_df(
+                self.spark, [io_mod._encode_triple(t.s, t.p, t.o) + (str(g),)
+                             for g, t in pairs]) if pairs else None
 
         self._commit(named=True, delete=quads(delete_quads),
                      insert=quads(insert_quads))
@@ -811,8 +816,7 @@ class LocalEndpoint(Endpoint):
         join; frontier is checkpointed (G5)."""
         node = self._resolve_node(node)
         kind = KIND_BNODE if isinstance(node, BNode) else KIND_IRI
-        nodes = self.spark.createDataFrame(
-            [(kind, str(node))], "f_kind string, f string")
+        nodes = local_frame(self.spark, [(kind, str(node))], _NODE_SCHEMA)
         return LocalEndpoint(self.spark, self._cbd(nodes),
                              prefixes=self.prefixes, base_uri=self.base_uri)
 
@@ -874,8 +878,8 @@ class LocalEndpoint(Endpoint):
             r for r in q.resources if not isinstance(r, Var)]
         frames = []
         if consts:
-            frames.append(self.spark.createDataFrame(
-                [(KIND_IRI, str(c)) for c in consts], "f_kind string, f string"))
+            frames.append(local_frame(
+                self.spark, [(KIND_IRI, str(c)) for c in consts], _NODE_SCHEMA))
         if q.where is not None:
             b = comp.compile_group(q.where)
             if q.resources == "*":

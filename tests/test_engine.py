@@ -355,7 +355,8 @@ def test_update_to_fixpoint_on_written_graph_skips_the_seed_copy(spark):
     the rule fixpoint starts from it as is instead of copying it before
     round one: fewer Spark jobs than the 35 this rule ran with that
     copy, the same closure, and a rule that derives nothing hands the
-    checkpointed store back untouched (a scan-backed one is copied)."""
+    checkpointed store back untouched (a scan-backed or local one is
+    copied)."""
     from sparkdon import paths
     from tests.conftest import spark_jobs
 
@@ -378,6 +379,11 @@ def test_update_to_fixpoint_on_written_graph_skips_the_seed_copy(spark):
     assert paths.fixpoint_union(e.graph, nothing) is e.graph
     scan = e.graph.filter("p != 'urn:none'")
     assert paths.fixpoint_union(scan, nothing) is not scan
+    # a never-written inline() graph is a LocalRelation of driver rows:
+    # not a checkpoint, so it is copied
+    local = inline("@prefix : <http://example.com/> . :a :q :b .", spark).graph
+    assert not paths._is_checkpoint(local)
+    assert paths.fixpoint_union(local, nothing) is not local
 
 
 def test_update_to_fixpoint_seminaive_matches_full_rederivation(spark):
@@ -710,12 +716,255 @@ def test_scan_columns_shared_across_threads(spark):
     assert terms.scan_columns() is not cols
 
 
-def test_scan_columns_keep_join_only_vars_as_ids(spark):
+def test_scan_columns_keep_join_only_vars_as_ids(spark, tmp_path):
     """``use_ids`` still carries the join-only ``?n`` and ``?r`` of the
-    geo lookup as ``xxhash64`` term ids, with the same answers."""
-    off, on = _lookup_endpoint(spark), _lookup_endpoint(spark, use_ids=True)
+    geo lookup as ``xxhash64`` term ids through the physical plan, with
+    the same answers.  The graph is a parquet store, as the benchmark's
+    is: over an ``inline()`` graph, a ``LocalRelation``, Catalyst folds
+    the id projections into the relation while it optimizes."""
+    from sparkdon.io import read_triple_store, write_triple_store
+
+    store = str(tmp_path / "store")
+    write_triple_store(_lookup_endpoint(spark).graph, store)
+    graph = read_triple_store(spark, store)
+
+    def endpoint(use_ids):
+        e = LocalEndpoint(spark, graph, use_ids=use_ids)
+        e.bind("p", "urn:p:")
+        return e
+
+    off, on = endpoint(False), endpoint(True)
     q, b = LOOKUPS["geo"], _customer(2)
     assert "xxhash64" in on.explain(q, b, mode="simple")
-    assert "xxhash64" not in off.explain(q, b, mode="simple")
+    assert "xxhash64" not in off.explain(q, b, mode="extended")
     assert _rows(on.select(q, b)) == _rows(off.select(q, b)) == [
         repr({"nname": "JAPAN", "rname": "ASIA"})]
+
+
+def _analyzed(df):
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def _is_local(df):
+    plan = _analyzed(df)
+    return "LocalRelation" in plan and "LogicalRDD" not in plan
+
+
+def test_driver_frames_are_local_relations(spark, monkeypatch):
+    """Every engine frame built from driver rows is an Arrow-built
+    ``LocalRelation``, not a ``LogicalRDD`` over pickled Python rows:
+    the driver-tier closure, VALUES, INSERT DATA, ``inline()``, ``peel``,
+    DESCRIBE constants and the empty named store."""
+    from sparkdon import paths
+    from sparkdon.terms import named_or_empty
+
+    e = inline(BOROS_TTL, spark)
+    assert _is_local(e.graph)
+    assert _is_local(named_or_empty(spark, None))
+    assert _is_local(e.select_raw("SELECT ?x { VALUES ?x { :a :b } }"))
+
+    pairs = [(("iri", "urn:a", None, None), ("iri", "urn:b", None, None))]
+    closure = paths._driver_closure(spark, pairs, [IRI("urn:a")],
+                                    forward=True, include_zero=False)
+    assert _is_local(closure)
+    assert closure.collect()[0]["node"]["lex"] == "urn:b"
+
+    inserted = []
+    commit = e._commit
+
+    def recording_commit(*args, **kwargs):
+        inserted.append(kwargs.get("insert"))
+        return commit(*args, **kwargs)
+
+    monkeypatch.setattr(e, "_commit", recording_commit)
+    e.update("INSERT DATA { :Queens :near :Brooklyn }")
+    assert inserted and _is_local(inserted[0])
+
+    starts = []
+    cbd = e._cbd
+
+    def recording_cbd(nodes, *args, **kwargs):
+        starts.append(nodes)
+        return cbd(nodes, *args, **kwargs)
+
+    monkeypatch.setattr(e, "_cbd", recording_cbd)
+    assert e.peel(":Manhattan").count() == 3
+    assert e.describe("DESCRIBE :Queens").count() == 2
+    assert len(starts) == 2 and all(_is_local(f) for f in starts)
+
+
+def test_large_driver_built_store_is_checkpointed(spark, monkeypatch):
+    """A parsed store of ``STORE_CHECKPOINT_ROWS`` distinct rows or more
+    is checkpointed once, as a written snapshot is, so no query over it
+    walks a ``LocalRelation`` of every row; a smaller one stays a
+    ``LocalRelation``.  Neither starts a Python worker."""
+    from sparkdon import io, paths
+
+    monkeypatch.setattr(io, "STORE_CHECKPOINT_ROWS", 3)
+    small = inline("@prefix : <http://example.com/> . "
+                   ":a :p :b . :a :p :b . :b :p :c .", spark)
+    big = inline("@prefix : <http://example.com/> . "
+                 ":a :p :b . :b :p :c . :c :p :d .", spark)
+    assert _is_local(small.graph) and not paths._is_checkpoint(small.graph)
+    assert paths._is_checkpoint(big.graph)
+    lineage = big.graph._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage
+    assert sorted(r.v_o.lex for r in big.select_raw(
+        "SELECT ?o { :a :p+ ?o }").collect()) == [
+        "http://example.com/b", "http://example.com/c", "http://example.com/d"]
+
+
+def test_driver_frames_keep_term_fidelity(spark):
+    """VALUES rows and INSERT/DELETE DATA triples survive the Arrow
+    trip exactly: UNDEF, language tags, datatypes, blank nodes and
+    non-ASCII lexical forms; duplicate inserted triples collapse."""
+    e = inline("@prefix : <http://example.com/> . :s :p :o .", spark)
+    rows = e.select_raw("""
+        SELECT ?x ?y { VALUES (?x ?y) {
+            (UNDEF "Манхэттен"@ru)
+            (_:b1 "7"^^xsd:integer)
+            (<http://example.com/Zürich> "naïve ✓") } }""").collect()
+    got = [(None if r.v_x is None else tuple(r.v_x), tuple(r.v_y))
+           for r in rows]
+    assert sorted(got, key=repr) == sorted([
+        (None, ("lit", "Манхэттен", None, "ru")),
+        (("bnode", "b1", None, None),
+         ("lit", "7", "http://www.w3.org/2001/XMLSchema#integer", None)),
+        (("iri", "http://example.com/Zürich", None, None),
+         ("lit", "naïve ✓", None, None)),
+    ], key=repr)
+    # VALUES without variables: an Arrow batch without columns carries
+    # no row count, so the two empty solutions must survive another way
+    assert e.select("SELECT (COUNT(*) AS ?n) { VALUES () { () () } }")[
+        "n"].tolist() == [2]
+
+    e.update("""INSERT DATA { :s :label "Köln"@de . :s :label "Köln"@de .
+                              :s :n 3 . :s :n 3 . :s :q "ß" } """)
+    assert e.count() == 4
+    assert sorted(tuple(r) for r in e.graph.collect()) == sorted([
+        ("iri", "http://example.com/s", "http://example.com/p",
+         "iri", "http://example.com/o", None, None),
+        ("iri", "http://example.com/s", "http://example.com/label",
+         "lit", "Köln", None, "de"),
+        ("iri", "http://example.com/s", "http://example.com/n",
+         "lit", "3", "http://www.w3.org/2001/XMLSchema#integer", None),
+        ("iri", "http://example.com/s", "http://example.com/q",
+         "lit", "ß", None, None),
+    ])
+    e.update('DELETE DATA { :s :label "Köln"@de . :s :n 3 }')
+    assert sorted(tuple(r)[2:5] for r in e.graph.collect()) == [
+        ("http://example.com/p", "iri", "http://example.com/o"),
+        ("http://example.com/q", "lit", "ß"),
+    ]
+
+
+def test_ask_runs_one_job(spark):
+    """ASK tests emptiness with ``isEmpty`` (one job, none over a local
+    frame) instead of ``limit(1).count()``, whose single-partition
+    Exchange ran as a second job; over an ``inline()`` graph no
+    distinct aggregate or Python worker adds jobs either."""
+    from tests.conftest import spark_jobs
+
+    e = inline(BOROS_TTL, spark)
+    assert e.named is None
+    for q, expected in (("ASK { GRAPH ?g { ?s ?p ?o } }", False),
+                        ("ASK { :Queens a :Borough }", True),
+                        ("ASK { :Queens a :City }", False)):
+        e.ask(q)  # warm the parse cache
+        answer, jobs = spark_jobs(spark, lambda: e.ask(q))
+        assert answer is expected
+        assert jobs <= 1, f"{q}: {jobs} jobs"
+
+
+def test_driver_tier_path_lineage_has_no_python_worker(spark):
+    """An anchored closure over an ``inline()`` graph runs in the JVM
+    alone: neither the graph nor the driver tier's result frame is a
+    pickled Python RDD, so the lineage holds no ``PythonRDD``."""
+    e = inline("""@prefix : <http://example.com/> .
+    :a :p :b . :b :p :c . :c :p :a .""", spark)
+    df = e.select_raw("SELECT ?o { :a :p+ ?o }")
+    assert sorted(r.v_o.lex for r in df.collect()) == [
+        "http://example.com/a", "http://example.com/b", "http://example.com/c"]
+    lineage = df._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage
+
+
+def test_local_frame_over_the_local_relation_threshold(spark):
+    """Rows over ``spark.sql.execution.arrow.localRelationThreshold``
+    become a JVM Arrow RDD: still no Python worker in the lineage, and
+    not taken for a checkpoint by the path loops."""
+    from sparkdon import paths
+    from sparkdon.terms import TRIPLE_SCHEMA, local_frame
+
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        rows = [("iri", f"urn:s{i}", "urn:p", "lit", "é" * 20, None, None)
+                for i in range(200)]
+        df = local_frame(spark, rows, TRIPLE_SCHEMA)
+    finally:
+        spark.conf.set(key, old)
+    assert "LogicalRDD" in _analyzed(df)
+    assert not paths._is_checkpoint(df)
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+    assert sorted(map(tuple, df.collect())) == sorted(rows)
+
+
+#: engine modules whose frames of driver rows must go through
+#: ``terms.local_frame``
+_LOCAL_FRAME_MODULES = ("terms", "paths", "io", "compile", "session",
+                        "graphstore", "remote")
+
+
+def test_engine_builds_driver_frames_only_through_local_frame():
+    """No engine module calls ``createDataFrame`` outside
+    ``terms.local_frame``: a ``createDataFrame(list)`` frame would start
+    Python workers on every job over it."""
+    import ast
+    from pathlib import Path
+
+    import sparkdon
+
+    root = Path(sparkdon.__file__).parent
+    stray = []
+    for mod in _LOCAL_FRAME_MODULES:
+        tree = ast.parse((root / f"{mod}.py").read_text())
+        allowed = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                allowed.update(id(n) for n in ast.walk(node))
+        stray += [f"{mod}.py:{n.lineno}" for n in ast.walk(tree)
+                  if isinstance(n, ast.Call)
+                  and isinstance(n.func, ast.Attribute)
+                  and n.func.attr == "createDataFrame"
+                  and id(n) not in allowed]
+    assert stray == []
+
+
+def test_expression_errors_leave_bind_unbound_over_a_local_graph(spark):
+    """Over an ``inline()`` graph, a ``LocalRelation``, Catalyst may
+    evaluate a BIND over every row before the group's FILTER removes
+    any: a cast, division or SUBSTR bound the expression cannot take is
+    a SPARQL error that leaves the variable unbound, never a failed
+    query."""
+    e = inline('@prefix : <http://example.com/> . '
+               ':a :d 2 . :b :d 0 . :c :d "x" .', spark)
+
+    def answers(q):
+        return sorted((r.v_s.lex[-1], r.v_q and r.v_q.lex)
+                      for r in e.select_raw(q).collect())
+
+    assert answers("SELECT ?s ?q { ?s :d ?d FILTER(?d != 0) "
+                   "BIND(6/?d AS ?q) }") == [("a", "3"), ("c", None)]
+    assert answers("SELECT ?s ?q { ?s :d ?d "
+                   "BIND(xsd:integer(STR(?d)) AS ?q) }") == [
+        ("a", "2"), ("b", "0"), ("c", None)]
+    # a string operand is a type error under SPARQL: "x" + 1 is unbound
+    assert ("c", None) in answers("SELECT ?s ?q { ?s :d ?d "
+                                  "BIND(STR(?d) + 1 AS ?q) }")
+    assert answers("SELECT ?s ?q { ?s :d ?d "
+                   "BIND(xsd:double(?d) AS ?q) }") == [
+        ("a", "2"), ("b", "0"), ("c", None)]
+    assert answers("SELECT ?s ?q { ?s :d ?d FILTER(?d = 2) "
+                   "BIND(SUBSTR('abc', ?d * 1e30) AS ?q) }") == [("a", None)]
