@@ -255,20 +255,35 @@ class UpdateRequest:
 # Tokenizer
 # ---------------------------------------------------------------------------
 
+#: SPARQL 1.1 grammar character classes (§19.8): PN_CHARS_BASE,
+#: PN_CHARS_U and PN_CHARS, as regex class bodies
+_PN_CHARS_BASE = ("A-Za-z\u00C0-\u00D6\u00D8-\u00F6\u00F8-\u02FF\u0370-\u037D"
+                  "\u037F-\u1FFF\u200C-\u200D\u2070-\u218F\u2C00-\u2FEF"
+                  "\u3001-\uD7FF\uF900-\uFDCF\uFDF0-\uFFFD\U00010000-\U000EFFFF")
+_PN_CHARS_U = _PN_CHARS_BASE + "_"
+_PN_CHARS = _PN_CHARS_U + "\\-0-9\u00B7\u0300-\u036F\u203F-\u2040"
+#: PN_PREFIX, PN_LOCAL (PLX is a %HH escape or a backslash escape) and
+#: VARNAME
+_PN_PREFIX = f"[{_PN_CHARS_BASE}](?:[{_PN_CHARS}.]*[{_PN_CHARS}])?"
+_PLX = r"%[0-9A-Fa-f]{2}|\\[_~.\-!$&'()*+,;=/?#@%]"
+_PN_LOCAL = (f"(?:[{_PN_CHARS_U}:0-9]|{_PLX})"
+             f"(?:(?:[{_PN_CHARS}.:]|{_PLX})*(?:[{_PN_CHARS}:]|{_PLX}))?")
+_VARNAME = f"[{_PN_CHARS_U}0-9][{_PN_CHARS_U}0-9\u00B7\u0300-\u036F\u203F-\u2040]*"
+
 TOKEN_RE = re.compile(
-    r"""
+    rf"""
       (?P<WS>\s+|\#[^\n]*)
-    | (?P<IRIREF><[^<>\"{}|^`\\\s]*>)
+    | (?P<IRIREF><[^<>\"{{}}|^`\\\s]*>)
     | (?P<STRING>"(?:[^"\\]|\\.)*"|'(?:[^'\\]|\\.)*')
     | (?P<LANGTAG>@[a-zA-Z]+(?:-[a-zA-Z0-9]+)*)
     | (?P<DTSEP>\^\^)
-    | (?P<VAR>[?$][A-Za-z_][A-Za-z_0-9]*)
+    | (?P<VAR>[?$]{_VARNAME})
     | (?P<NUM>[+-]?(?:\d+\.\d*|\.\d+|\d+)(?:[eE][+-]?\d+)?)
-    | (?P<BNODE>_:[A-Za-z_0-9.-]+)
-    | (?P<PNAME>[A-Za-z_][A-Za-z_0-9.-]*?:[A-Za-z_0-9.%-]*|:[A-Za-z_0-9.%-]*)
+    | (?P<BNODE>_:[{_PN_CHARS_U}0-9](?:[{_PN_CHARS}.]*[{_PN_CHARS}])?)
+    | (?P<PNAME>(?:{_PN_PREFIX})?:(?:{_PN_LOCAL})?)
     | (?P<KEYWORD>[A-Za-z_][A-Za-z_0-9]*)
     | (?P<OP>\|\||&&|!=|<=|>=|\^|\*|\+|/|\||!|=|<|>|-|\?)
-    | (?P<PUNCT>[{}().,;\[\]])
+    | (?P<PUNCT>[{{}}().,;\[\]])
     """,
     re.VERBOSE,
 )
@@ -1181,7 +1196,8 @@ class Parser:
             pfx, _, local = t.text.partition(":")
             if pfx not in self.prefixes:
                 raise SparqlSyntaxError(self.text, t.pos, f"unknown prefix {pfx!r}")
-            return IRI(self.prefixes[pfx] + local)
+            # PN_LOCAL_ESC: a backslash-escaped character stands for itself
+            return IRI(self.prefixes[pfx] + re.sub(r"\\(.)", r"\1", local))
         raise SparqlSyntaxError(self.text, t.pos, f"expected IRI, got {t.text!r}")
 
     def parse_term(self):

@@ -44,10 +44,11 @@ from sparkdon.algebra import (
     TriplePattern, UnionGroup, UpdateRequest, ValuesClause, Var,
 )
 from sparkdon.errors import QueryExecutionError
+from sparkdon.operators.dictionary import term_id_sql
 from sparkdon.terms import (
     XSD, BNode, IRI, KIND_BNODE, KIND_IRI, KIND_LIT, Literal, NUMERIC_DATATYPES,
     iri_term, lit_term, local_frame, make_term, named_or_empty, numeric_value,
-    scan_columns, sort_key, term_schema,
+    scan_columns, sort_key, term_schema, term_sql,
 )
 
 
@@ -242,6 +243,36 @@ def term_to_struct(term) -> Column:
     raise QueryExecutionError(f"cannot encode constant {term!r}")
 
 
+#: the SQL of each triple-pattern position over the flattened triple
+#: layout: (term struct, term id)
+_SLOT_SQL = {
+    "s": (term_sql("s_kind", "s"), term_id_sql("s_kind", "s")),
+    "p": (term_sql(f"'{KIND_IRI}'", "p"), term_id_sql(f"'{KIND_IRI}'", "p")),
+    "o": (term_sql("o_kind", "o", "o_dt", "o_lang"),
+          term_id_sql("o_kind", "o", "o_dt", "o_lang")),
+    "g": (term_sql(f"'{KIND_IRI}'", "g"), term_id_sql(f"'{KIND_IRI}'", "g")),
+}
+
+
+def _kind(term) -> str:
+    """Term kind of a constant IRI or blank node in a pattern."""
+    return KIND_IRI if isinstance(term, IRI) else KIND_BNODE
+
+
+#: Spark SQL type of a term struct
+_TERM_TYPE = "struct<kind:string,lex:string,dt:string,lang:string>"
+
+
+def _null_term() -> Column:
+    """The unbound term: a NULL term struct."""
+    return F.lit(None).cast(_TERM_TYPE)
+
+
+def _ident(name: str) -> str:
+    """A Spark SQL quoted identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 #: session-wide counter so every construct() call gets distinct bnode labels
 _construct_nonce = itertools.count()
 
@@ -427,69 +458,121 @@ class Compiler:
     # triple patterns
     # ------------------------------------------------------------------
 
-    def compile_pattern(self, tp: TriplePattern,
-                        anchor_sets: dict | None = None,
-                        prior: Bindings | None = None) -> Bindings:
-        if isinstance(tp.p, Path):
-            return self.compile_path_pattern(tp, anchor_sets, prior)
-        sc = scan_columns()
-        df = self._pattern_frames.get(id(tp), self.triples)
-        # constant positions: one filter per condition; Catalyst combines
-        # them into the one Filter that pushes into the Parquet scan (a
-        # single `&` conjunction would re-associate its AND tree and
-        # cost a Column call per `&`)
-        conds: list[Column] = []
-        if not isinstance(tp.s, Var):
-            if not isinstance(tp.s, (IRI, BNode)):
-                raise QueryExecutionError("literal subject in pattern")
-            conds += [sc.s_is[KIND_IRI if isinstance(tp.s, IRI) else KIND_BNODE],
-                      sc.s == str(tp.s)]
-        if not isinstance(tp.p, Var):
-            conds.append(sc.p == str(tp.p))
-        if isinstance(tp.o, (IRI, BNode)):
-            conds += [sc.o_is[KIND_IRI if isinstance(tp.o, IRI) else KIND_BNODE],
-                      sc.o == str(tp.o)]
-        elif not isinstance(tp.o, Var):
-            conds += [sc.o_is[KIND_LIT], sc.o == tp.o.lex,
-                      sc.o_dt == tp.o.datatype if tp.o.datatype else sc.o_dt_null,
-                      sc.o_lang == tp.o.lang if tp.o.lang else sc.o_lang_null]
-        for c in conds:
-            df = df.filter(c)
+    def compile_bgp(self, patterns: list[TriplePattern]) -> Bindings:
+        """A run of plain triple patterns as ONE Spark SQL statement.
 
-        # var positions: only the representation each var needs — a late
-        # var's id rides the joins and its struct feeds the decode relation
-        slots = [(tp.s, sc.s_term, sc.s_id), (tp.p, sc.p_term, sc.p_id),
-                 (tp.o, sc.o_term, sc.o_id)]
-        if self.graph_var is not None:
-            # inside GRAPH ?g: every pattern scan additionally binds the
-            # graph name (a repeat when ?g also sits in an s/p/o position)
-            slots.append((Var(self.graph_var), sc.g_term, sc.g_id))
-        proj: dict[str, Column] = {}
-        repeats: list[Column] = []
-        for term, struct_col, id_col in slots:
-            if not isinstance(term, Var):
-                continue
-            name = term.name
-            if name in self.late:
-                col = id_col
-                # decode relation: exactly this pattern's (constant-
-                # filtered, hence pushdown-pruned) scan, projected to
-                # (id, struct) — unioned per var and deduped at the final
-                # decode join in compile_select
-                self._decode_src.setdefault(name, []).append(
-                    df.select(id_col.alias("__tid"), struct_col.alias("__term")))
-            else:
-                col = id_col if name in self.id_only else struct_col
-            if name in proj:  # repeated var in one pattern
-                repeats.append(proj[name].eqNullSafe(col))
-            else:
-                proj[name] = col
+        Each pattern is a scan subquery over its source frame
+        (``self.triples``, its ``_pattern_frames`` delta, or the named
+        store inside ``GRAPH``): constant positions become equality
+        filters on named parameters, variables become ``named_struct``
+        term structs (:func:`~sparkdon.terms.term_sql`) or, under
+        ``use_ids``, ``xxhash64`` term ids, and a variable repeated in
+        one pattern compares with ``<=>``.  The scans then inner-join on
+        their shared variables in element order (``JOIN ... USING``), or
+        ``CROSS JOIN`` where they share none, so the columns and their
+        order are those of the pairwise :meth:`join` of single patterns.
 
-        out = df.select(*[c.alias(vcol(n)) for n, c in proj.items()])
-        for f in repeats:
-            out = out.filter(f)
-        names = list(proj.keys())
-        return Bindings(out, names, set(names))
+        Query constants travel only in ``args`` as named parameters,
+        never in the text: SPARQL text comes from untrusted clients.
+
+        Cost model: the statement is parsed and analyzed in the JVM, so
+        a BGP costs one ``spark.sql`` call (a temp view per source
+        frame, one literal per distinct constant) instead of 9-13 py4j
+        round trips per Column call of a scan or join built through the
+        Column API: the three-pattern attrs lookup fell from 297 round
+        trips to 22."""
+        args: dict[str, str] = {}
+        frames: dict[str, DataFrame] = {}
+
+        def param(value: str) -> str:
+            name = next((k for k, v in args.items() if v == value),
+                        f"c{len(args)}")
+            args[name] = value
+            return ":" + name
+
+        def source(tp: TriplePattern) -> str:
+            df = self._pattern_frames.get(id(tp), self.triples)
+            name = next((k for k, f in frames.items() if f is df),
+                        f"f{len(frames)}")
+            frames[name] = df
+            return "{" + name + "}"
+
+        decode: dict[str, list[str]] = {}
+        order: list[str] = []
+        joined = ""
+        for i, tp in enumerate(patterns):
+            src = source(tp)
+            conds: list[str] = []
+            if not isinstance(tp.s, Var):
+                if not isinstance(tp.s, (IRI, BNode)):
+                    raise QueryExecutionError("literal subject in pattern")
+                conds += [f"s_kind = '{_kind(tp.s)}'", f"s = {param(str(tp.s))}"]
+            if not isinstance(tp.p, Var):
+                conds.append(f"p = {param(str(tp.p))}")
+            if isinstance(tp.o, (IRI, BNode)):
+                conds += [f"o_kind = '{_kind(tp.o)}'", f"o = {param(str(tp.o))}"]
+            elif not isinstance(tp.o, Var):
+                conds += [f"o_kind = '{KIND_LIT}'", f"o = {param(tp.o.lex)}",
+                          f"o_dt = {param(tp.o.datatype)}" if tp.o.datatype
+                          else "o_dt IS NULL",
+                          f"o_lang = {param(tp.o.lang)}" if tp.o.lang
+                          else "o_lang IS NULL"]
+            where = " WHERE " + " AND ".join(conds) if conds else ""
+
+            slots = [(tp.s, "s"), (tp.p, "p"), (tp.o, "o")]
+            if self.graph_var is not None:
+                # inside GRAPH ?g: every pattern scan additionally binds
+                # the graph name (a repeat when ?g also sits in s/p/o)
+                slots.append((Var(self.graph_var), "g"))
+            cols: dict[str, str] = {}
+            repeats: list[str] = []
+            for term, pos in slots:
+                if not isinstance(term, Var):
+                    continue
+                name = term.name
+                struct, tid = _SLOT_SQL[pos]
+                if name in self.late:
+                    expr = tid
+                    # decode relation: exactly this pattern's constant-
+                    # filtered scan, projected to (id, struct), unioned
+                    # per var and deduped at the decode join
+                    decode.setdefault(name, []).append(
+                        f"SELECT {tid} AS __tid, {struct} AS __term "
+                        f"FROM {src}{where}")
+                else:
+                    expr = tid if name in self.id_only else struct
+                if name in cols:
+                    repeats.append(f"{cols[name]} <=> {expr}")
+                else:
+                    cols[name] = expr
+            if repeats:
+                where += (" AND " if where else " WHERE ") + " AND ".join(repeats)
+            select = ", ".join(f"{e} AS {_ident(vcol(n))}" for n, e in cols.items())
+            scan = f"(SELECT {select or '1 AS __t'} FROM {src}{where}) AS t{i}"
+
+            shared = [v for v in order if v in cols]
+            if not joined:
+                joined, order = scan, list(cols)
+            elif shared:
+                using = ", ".join(_ident(vcol(v)) for v in shared)
+                joined += f" JOIN {scan} USING ({using})"
+                order = (shared + [v for v in order if v not in shared]
+                         + [v for v in cols if v not in shared])
+            else:
+                joined += f" CROSS JOIN {scan}"
+                order += list(cols)
+
+        out = ", ".join(_ident(vcol(v)) for v in order)
+        session = next(iter(frames.values())).sparkSession
+        sql = f"SELECT {out or '1 AS __t'} FROM {joined}"
+        df = session.sql(sql, args=args, **frames)
+        if not order:
+            df = df.select()
+        for name, scans in decode.items():
+            sql = " UNION ALL ".join(scans)
+            self._decode_src.setdefault(name, []).append(
+                session.sql(sql, args=args, **frames))
+        return Bindings(df, order, set(order))
 
     def compile_path_pattern(self, tp: TriplePattern,
                              anchor_sets: dict | None = None,
@@ -921,7 +1004,19 @@ class Compiler:
                     vals = [row[i] for row in el.rows]
                     if vals and all(t is not None for t in vals):
                         anchor_sets.setdefault(v.name, vals)
+        bgp: list[TriplePattern] = []
         for el in self._reorder_for_sip(group.elements):
+            if isinstance(el, TriplePattern) and not isinstance(el.p, Path):
+                # a maximal run of plain patterns (deferred filters do not
+                # break it) compiles to one SQL statement
+                bgp.append(el)
+                continue
+            if isinstance(el, Filter):
+                deferred.append(el.expr)
+                continue
+            if bgp:
+                bindings = self.join(bindings, self.compile_bgp(bgp))
+                bgp = []
             if isinstance(el, TriplePattern):
                 prior = bindings
                 if (bindings is not None and isinstance(el.p, Path)
@@ -937,7 +1032,7 @@ class Compiler:
                             prior = self.apply_filter(prior, expr)
                 bindings = self.join(
                     bindings,
-                    self.compile_pattern(el, anchor_sets, prior=prior))
+                    self.compile_path_pattern(el, anchor_sets, prior=prior))
             elif isinstance(el, OptionalGroup):
                 if bindings is None:
                     bindings = self.unit()
@@ -1019,7 +1114,7 @@ class Compiler:
                         if v not in b.variables:
                             typ = ("bigint"
                                    if v in self.id_only or v in self.late else
-                                   "struct<kind:string,lex:string,dt:string,lang:string>")
+                                   _TERM_TYPE)
                             df = df.withColumn(vcol(v), F.lit(None).cast(typ))
                     dfs.append(df.select(*[vcol(v) for v in all_vars]))
                 u = dfs[0]
@@ -1084,10 +1179,10 @@ class Compiler:
                 bindings = self.join(bindings, self.compile_service(el, prior))
             elif isinstance(el, GraphGroup):
                 bindings = self.join(bindings, self.compile_graph_group(el))
-            elif isinstance(el, Filter):
-                deferred.append(el.expr)
             else:
                 raise QueryExecutionError(f"unsupported group element {type(el).__name__}")
+        if bgp:
+            bindings = self.join(bindings, self.compile_bgp(bgp))
         if bindings is None:
             bindings = self.unit()
         for expr in deferred:
@@ -1526,8 +1621,7 @@ class Compiler:
             t = expr.term
             if isinstance(t, Var):
                 if t.name not in colmap:
-                    return ("term", F.lit(None).cast(
-                        "struct<kind:string,lex:string,dt:string,lang:string>"))
+                    return ("term", _null_term())
                 return ("term", colmap[t.name])
             if isinstance(t, Literal) and t.datatype in NUMERIC_DATATYPES:
                 if t.datatype == XSD + "integer":
@@ -1570,7 +1664,9 @@ class Compiler:
         if kind == "term":
             return numeric_value(col)
         if kind == "str":
-            return col.try_cast("double")
+            # a simple literal is not a number: a SPARQL type error,
+            # NULL here, which leaves a BIND unbound
+            return F.lit(None).cast("double")
         if kind == "bool":
             return col.cast("double")
         raise QueryExecutionError(f"cannot coerce {kind} to number")
@@ -1618,14 +1714,18 @@ class Compiler:
         if kind == "num":
             hint = val[2] if len(val) > 2 else "double"
             if hint == "integer":
-                return lit_term(col.cast("long").cast("string"), XSD + "integer")
-            lex = F.regexp_replace(col.cast("string"), r"\.0$", "")
-            return lit_term(lex, XSD + "double")
-        if kind == "str":
-            return lit_term(col)
-        if kind == "bool":
-            return lit_term(F.when(col, "true").otherwise("false"), XSD + "boolean")
-        raise QueryExecutionError(f"cannot convert {kind} to term")
+                term = lit_term(col.cast("long").cast("string"), XSD + "integer")
+            else:
+                lex = F.regexp_replace(col.cast("string"), r"\.0$", "")
+                term = lit_term(lex, XSD + "double")
+        elif kind == "str":
+            term = lit_term(col)
+        elif kind == "bool":
+            term = lit_term(F.when(col, "true").otherwise("false"), XSD + "boolean")
+        else:
+            raise QueryExecutionError(f"cannot convert {kind} to term")
+        # an error value (NULL) is no term: the variable stays unbound
+        return F.when(col.isNotNull(), term)
 
     def eq_cond(self, a, b) -> Column:
         """SPARQL '=': numeric by value when both numeric, else term identity."""
@@ -1919,58 +2019,61 @@ class Compiler:
         n_hidden = 0
         if has_agg:
             bindings = self._aggregate(q, bindings, defer_decode=defer)
-        else:
-            if q.projections:
-                ex_bearing = [e for e, _a in q.projections
-                              if not isinstance(e, Var)
-                              and self._contains_exists(e)]
-                ex_bearing += [e for e, _d in (q.order_by or [])
-                               if self._contains_exists(e)]
-                prev_flags = self._exists_flags
-                if ex_bearing:
-                    # SELECT (… EXISTS {…} … AS ?x) / ORDER BY with
-                    # EXISTS (r16): precompute per-row flags; the final
-                    # projection select() lists its columns explicitly,
-                    # so the helper columns fall away without a drop
-                    cur, _helper, fmap = self._exists_flag_frame(
-                        bindings, ex_bearing)
-                    bindings = Bindings(cur, bindings.variables,
-                                        bindings.certain)
-                    self._exists_flags = {k: cur[c]
-                                          for k, c in fmap.items()}
-                colmap = {v: bindings.col(v) for v in bindings.variables}
-                sel, names = [], []
-                ext_colmap = dict(colmap)
-                for e, alias in q.projections:
-                    if isinstance(e, Var):
-                        name = alias.name if alias else e.name
-                        col = colmap.get(e.name, F.lit(None).cast(
-                            "struct<kind:string,lex:string,dt:string,lang:string>"))
-                    else:
-                        name = alias.name
-                        col = self.expr_term(e, colmap)
-                    sel.append(col.alias(vcol(name)))
-                    names.append(name)
-                    # SELECT aliases are in scope for ORDER BY
-                    ext_colmap.setdefault(name, col)
-                hidden = []
-                if q.order_by:
-                    # SPARQL evaluates ORDER BY before projection, over all
-                    # in-scope variables — carry the sort keys as hidden
-                    # columns through the projection, drop them after the
-                    # sort (spec §18.5: Order then Project).
-                    for i, (e, _d) in enumerate(q.order_by):
-                        val = self.compile_expr(e, ext_colmap)
-                        key = sort_key(self.as_term(val)) if val[0] == "term" else val[1]
-                        hidden.append(key.alias(f"__ord{i}"))
-                    n_hidden = len(hidden)
-                certain = {
-                    (a.name if a else e.name)
-                    for e, a in q.projections
-                    if isinstance(e, Var) and e.name in bindings.certain
-                }
-                bindings = Bindings(bindings.df.select(*sel, *hidden), names, certain)
-                self._exists_flags = prev_flags
+        elif q.projections and not q.order_by and all(
+                isinstance(e, Var) for e, _a in q.projections):
+            bindings = self._project_vars(q, bindings)
+        elif q.projections:
+            ex_bearing = [e for e, _a in q.projections
+                          if not isinstance(e, Var)
+                          and self._contains_exists(e)]
+            ex_bearing += [e for e, _d in (q.order_by or [])
+                           if self._contains_exists(e)]
+            prev_flags = self._exists_flags
+            if ex_bearing:
+                # SELECT (… EXISTS {…} … AS ?x) / ORDER BY with
+                # EXISTS (r16): precompute per-row flags; the final
+                # projection select() lists its columns explicitly,
+                # so the helper columns fall away without a drop
+                cur, _helper, fmap = self._exists_flag_frame(
+                    bindings, ex_bearing)
+                bindings = Bindings(cur, bindings.variables,
+                                    bindings.certain)
+                self._exists_flags = {k: cur[c]
+                                      for k, c in fmap.items()}
+            colmap = {v: bindings.col(v) for v in bindings.variables}
+            sel, names = [], []
+            ext_colmap = dict(colmap)
+            for e, alias in q.projections:
+                if isinstance(e, Var):
+                    name = alias.name if alias else e.name
+                    col = colmap.get(e.name)
+                    if col is None:
+                        col = _null_term()
+                else:
+                    name = alias.name
+                    col = self.expr_term(e, colmap)
+                sel.append(col.alias(vcol(name)))
+                names.append(name)
+                # SELECT aliases are in scope for ORDER BY
+                ext_colmap.setdefault(name, col)
+            hidden = []
+            if q.order_by:
+                # SPARQL evaluates ORDER BY before projection, over all
+                # in-scope variables — carry the sort keys as hidden
+                # columns through the projection, drop them after the
+                # sort (spec §18.5: Order then Project).
+                for i, (e, _d) in enumerate(q.order_by):
+                    val = self.compile_expr(e, ext_colmap)
+                    key = sort_key(self.as_term(val)) if val[0] == "term" else val[1]
+                    hidden.append(key.alias(f"__ord{i}"))
+                n_hidden = len(hidden)
+            certain = {
+                (a.name if a else e.name)
+                for e, a in q.projections
+                if isinstance(e, Var) and e.name in bindings.certain
+            }
+            bindings = Bindings(bindings.df.select(*sel, *hidden), names, certain)
+            self._exists_flags = prev_flags
         if q.distinct:
             if n_hidden:
                 # dedup on the projected columns only; take the MIN of each
@@ -2026,6 +2129,22 @@ class Compiler:
             bindings = Bindings(bindings.df.limit(q.limit), bindings.variables,
                                 bindings.certain)
         return bindings
+
+    @staticmethod
+    def _project_vars(q: SelectQuery, bindings: Bindings) -> Bindings:
+        """``SELECT ?a ?b …`` of plain variables, by name in SQL text:
+        no Column API call (9-13 py4j round trips each), and no
+        projection at all when the frame holds exactly these columns."""
+        names = [a.name if a else e.name for e, a in q.projections]
+        certain = {n for (e, _a), n in zip(q.projections, names)
+                   if e.name in bindings.certain}
+        if (names == bindings.variables
+                and bindings.df.columns == [vcol(n) for n in names]):
+            return Bindings(bindings.df, names, certain)
+        exprs = [(_ident(vcol(e.name)) if e.name in bindings.variables
+                  else f"CAST(NULL AS {_TERM_TYPE})") + " AS " + _ident(vcol(n))
+                 for (e, _a), n in zip(q.projections, names)]
+        return Bindings(bindings.df.selectExpr(*exprs), names, certain)
 
     def _agg_value_vars(self, q: SelectQuery) -> frozenset[str]:
         """Vars whose VALUES are consumed during aggregate computation —

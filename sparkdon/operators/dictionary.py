@@ -40,6 +40,15 @@ def term_id(kind, lex, dt=None, lang=None):
                       F.coalesce(lang, F.lit(NULL_SENTINEL)))
 
 
+def term_id_sql(kind: str, lex: str, dt: str = "CAST(NULL AS STRING)",
+                lang: str = "CAST(NULL AS STRING)") -> str:
+    """Spark SQL text of :func:`term_id` over SQL expressions (column
+    names or engine literals, never query constants); ``chr(0)`` is
+    :data:`NULL_SENTINEL`, so both forms give the same bits."""
+    return (f"xxhash64({kind}, {lex}, coalesce({dt}, chr(0)), "
+            f"coalesce({lang}, chr(0)))")
+
+
 _tid = term_id
 
 

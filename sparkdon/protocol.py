@@ -37,6 +37,7 @@ import threading
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from sparkdon.errors import SparkdonError
 from sparkdon.terms import KIND_BNODE, KIND_IRI
 
 _FORM_RE = re.compile(
@@ -370,12 +371,21 @@ class SparqlProtocolServer:
                 else:
                     body = self._select_tsv(sparql, dataset).encode()
             else:
-                raise ValueError(
+                raise SparkdonError(
                     f"unsupported query form {form or 'EMPTY'!r}; this "
                     "endpoint serves SELECT / ASK / CONSTRUCT / DESCRIBE "
                     "/ update")
-        except Exception as e:  # protocol: malformed/failed → 4xx + text
+        except SparkdonError as e:
+            # the engine raises its own errors for faults of the request:
+            # syntax (SparqlSyntaxError), query semantics
+            # (QueryExecutionError), the wrong query form, a missing graph
             self._plain(h, 400, str(e))
+            return
+        except Exception as e:
+            # anything else (a Spark ParseException or AnalysisException
+            # from compiled SQL included) is an engine fault: 500, as in
+            # graphstore.py
+            self._plain(h, 500, str(e))
             return
         ctype = {
             "json": "application/sparql-results+json",

@@ -31,8 +31,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from sparkdon.operators.dictionary import term_id
-
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
@@ -207,40 +205,38 @@ def make_term(kind: Column | str, lex: Column, dt: Column | None = None,
     )
 
 
+def term_sql(kind: str, lex: str, dt: str = "CAST(NULL AS STRING)",
+             lang: str = "CAST(NULL AS STRING)") -> str:
+    """Spark SQL text of a term struct over SQL expressions (column
+    names or engine literals, never query constants): the
+    ``named_struct`` twin of :func:`make_term`, of the same type."""
+    return (f"named_struct('kind', {kind}, 'lex', {lex}, "
+            f"'dt', {dt}, 'lang', {lang})")
+
+
 class ScanColumns:
-    """The Columns a triple-pattern scan is compiled from, over the
-    flattened triple layout (plus the quad store's ``g``): the raw
-    columns, each position's term struct and 64-bit ``term_id``, the
-    kind guards (``s_is[KIND_IRI]`` is ``s_kind = 'iri'``), the
-    ``o_dt``/``o_lang`` IS NULL guards and the NULL string literal.
+    """The triple-scan Columns that property paths and ``GRAPH`` still
+    build through the Column API, over the flattened triple layout (plus
+    the quad store's ``g``): the ``p`` and ``g`` columns, the s/o/g term
+    structs and the NULL string literal.  Plain triple patterns compile
+    to Spark SQL text instead (compile.py ``Compiler.compile_bgp``).
 
     Compile cost model: under PySpark 4 every API call that builds a
     Column (``F.col``, ``F.lit``, ``.cast``, ``.alias``, ``==``,
     ``F.struct``, ...) costs 9 to 13 py4j round trips, so one term
-    struct costs 55 to 110 and one ``term_id`` about 50.  None of these
-    depends on the query, so :func:`scan_columns` builds them once per
-    SparkContext and every compile, on every thread, shares them: a
-    Column is an immutable expression, resolved afresh by each plan it
-    is used in.
+    struct costs 55 to 110.  None of these depends on the query, so
+    :func:`scan_columns` builds them once per SparkContext and every
+    compile, on every thread, shares them: a Column is an immutable
+    expression, resolved afresh by each plan it is used in.
     """
 
     def __init__(self) -> None:
         self.null = null = F.lit(None).cast("string")
-        (self.s_kind, self.s, self.p, self.o_kind, self.o, self.o_dt,
-         self.o_lang, self.g) = (F.col(c) for c in QUAD_SCHEMA.fieldNames())
-        iri = F.lit(KIND_IRI)
-        self.s_term = make_term(self.s_kind, self.s, null, null)
-        self.p_term = make_term(iri, self.p, null, null)
-        self.o_term = make_term(self.o_kind, self.o, self.o_dt, self.o_lang)
-        self.g_term = make_term(iri, self.g, null, null)
-        self.s_id = term_id(self.s_kind, self.s, null, null)
-        self.p_id = term_id(iri, self.p, null, null)
-        self.o_id = term_id(self.o_kind, self.o, self.o_dt, self.o_lang)
-        self.g_id = term_id(iri, self.g, null, null)
-        self.s_is = {k: self.s_kind == k for k in (KIND_IRI, KIND_BNODE)}
-        self.o_is = {k: self.o_kind == k for k in (KIND_IRI, KIND_BNODE, KIND_LIT)}
-        self.o_dt_null = self.o_dt.isNull()
-        self.o_lang_null = self.o_lang.isNull()
+        s_kind, s, self.p, o_kind, o, o_dt, o_lang, self.g = (
+            F.col(c) for c in QUAD_SCHEMA.fieldNames())
+        self.s_term = make_term(s_kind, s, null, null)
+        self.o_term = make_term(o_kind, o, o_dt, o_lang)
+        self.g_term = make_term(F.lit(KIND_IRI), self.g, null, null)
 
 
 #: ``(SparkContext, ScanColumns)`` of the last :func:`scan_columns` call

@@ -661,20 +661,23 @@ def _rows(df):
 
 
 def test_pattern_compile_round_trips(spark):
-    """A selective lookup compiles in a few hundred py4j round trips: the
-    triple-scan term structs, term ids and guards are built once per
-    SparkContext (``terms.scan_columns``) and each pattern takes only the
-    Columns its variables need.  Rebuilding them for every pattern cost
-    2,115 / 1,323 / 2,557 round trips for these compiles."""
+    """A selective lookup compiles in a few dozen py4j round trips: its
+    basic graph pattern is one ``spark.sql`` statement whose constants
+    are named parameters, and its plain variables project by name.
+    Building every scan, join and projection one Column call at a time
+    cost 297 / 148 / 244 round trips for these compiles (and 2,115 /
+    1,323 / 2,557 before the scan Columns were shared)."""
+    import gc
+
     from tests.conftest import py4j_round_trips
 
-    rebuilt = {"attrs": 2115, "orders": 1323, "geo": 2557}
     e = _lookup_endpoint(spark)
-    for name, limit in rebuilt.items():
+    for name in ("attrs", "orders", "geo"):
         q, b = LOOKUPS[name], _customer(1)
-        e.select_raw(q, b)  # warm: parse cache and the shared Columns
+        e.select_raw(q, b)  # warm: the parse cache
+        gc.collect()  # release earlier proxies before counting
         _, n = py4j_round_trips(lambda: e.select_raw(q, b))
-        assert n <= limit // 3, f"{name}: {n} round trips to compile"
+        assert n <= 60, f"{name}: {n} round trips to compile"
 
 
 def test_scan_columns_shared_across_threads(spark):
@@ -968,3 +971,39 @@ def test_expression_errors_leave_bind_unbound_over_a_local_graph(spark):
         ("a", "2"), ("b", "0"), ("c", None)]
     assert answers("SELECT ?s ?q { ?s :d ?d FILTER(?d = 2) "
                    "BIND(SUBSTR('abc', ?d * 1e30) AS ?q) }") == [("a", None)]
+
+
+def test_plain_strings_are_not_numbers(spark):
+    """A simple literal is not a number: in arithmetic, a numeric
+    function or a SUBSTR position it is a SPARQL type error, so
+    ``BIND(STR(?n) + 1 AS ?q)`` with ``?n`` = 6 leaves ``?q`` unbound
+    (it bound 7), ``ISNUMERIC(STR(?n))`` is false, and two numeric-
+    looking strings compare as strings."""
+    e = inline('@prefix : <http://example.com/> . :a :n 6 .', spark)
+
+    def bound(expr):
+        rows = e.select_raw(
+            f"SELECT ?q {{ :a :n ?n BIND({expr} AS ?q) }}").collect()
+        assert len(rows) == 1
+        return None if rows[0].v_q is None else rows[0].v_q.lex
+
+    assert bound("?n + 1") == "7"
+    assert bound("xsd:integer(STR(?n)) + 1") == "7"
+    for expr in ("STR(?n) + 1", "1 * STR(?n)", "-STR(?n)", "ABS(STR(?n))",
+                 "CEIL(STR(?n))", "FLOOR(STR(?n))", "ROUND(STR(?n))",
+                 "SUBSTR('abcdefg', STR(?n))", "STR(?n) / 2"):
+        assert bound(expr) is None, expr
+    assert bound("ISNUMERIC(STR(?n))") == "false"
+    assert bound("COALESCE(STR(?n) + 1, 0)") == "0"
+    assert bound("STR(10) < STR(?n)") == "true"
+    assert e.select("SELECT ?q { :a :n ?n BIND(STR(?n) + 1 AS ?q) "
+                    "FILTER(!BOUND(?q)) }")["q"].tolist() == [None]
+
+
+def test_values_take_non_ascii_prefixed_names(spark):
+    e = inline('@prefix : <http://example.com/> . :Zürich :in :Schweiz .',
+               spark)
+    rows = e.select_raw(
+        "SELECT ?x ?c { VALUES ?x { :Zürich } ?x :in ?c }").collect()
+    assert [(r.v_x.lex, r.v_c.lex) for r in rows] == [
+        ("http://example.com/Zürich", "http://example.com/Schweiz")]

@@ -481,3 +481,64 @@ def test_construct_turtle_and_rdfxml_negotiation(served):
     # default (no Accept) stays N-Triples
     resp = post(served.url, q, "application/sparql-query")
     assert resp.headers["Content-Type"] == "application/n-triples"
+
+
+class _FailingEndpoint:
+    """Answers every query, update and ASK by raising ``make_error()``."""
+
+    def __init__(self, make_error):
+        self.make_error = make_error
+
+    def _fail(self, *args, **kwargs):
+        raise self.make_error()
+
+    select_raw = ask = construct = describe = update = _fail
+
+
+def _status(srv, body: str, ctype="application/sparql-query") -> int:
+    try:
+        return post(srv.url, body, ctype).status
+    except urllib.error.HTTPError as exc:
+        return exc.code
+
+
+def test_only_client_faults_answer_400(spark):
+    """Parse and query errors, a wrong query form and an unsupported one
+    are the client's fault (400); anything else, a Spark
+    ``ParseException`` or ``AnalysisException`` from compiled SQL
+    included, is an engine fault (500) and no longer blamed on the
+    client."""
+    from sparkdon.errors import (
+        QueryExecutionError, SparkdonError, SparqlSyntaxError,
+    )
+
+    def spark_error(text):
+        def make():
+            try:
+                spark.sql(text)
+            except Exception as exc:
+                return exc
+            raise AssertionError(f"{text!r} did not fail")
+        return make
+
+    cases = [
+        (lambda: SparqlSyntaxError("ASK {", 5, "expected '}'"), 400),
+        (lambda: QueryExecutionError("literal subject in pattern"), 400),
+        (lambda: SparkdonError("ask() requires an ASK query"), 400),
+        (spark_error("SELEC 1"), 500),                     # ParseException
+        (spark_error("SELECT no_such_column"), 500),       # AnalysisException
+        (lambda: RuntimeError("engine bug"), 500),
+    ]
+    for make_error, code in cases:
+        srv = SparqlProtocolServer(_FailingEndpoint(make_error)).start()
+        try:
+            name = type(make_error()).__name__
+            for body, ctype in (("ASK { ?s ?p ?o }", "application/sparql-query"),
+                                ("SELECT * { ?s ?p ?o }", "application/sparql-query"),
+                                ("INSERT DATA { <a:s> <a:p> <a:o> }",
+                                 "application/sparql-update")):
+                assert _status(srv, body, ctype) == code, (name, body)
+            # the handler's own "unsupported query form" stays a 400
+            assert _status(srv, "LOAD <a:b>") == 400, name
+        finally:
+            srv.stop()

@@ -68,3 +68,33 @@ def test_sparql_string_literal_roundtrip(s):
     tp = q.where.elements[0]
     assert isinstance(tp.o, terms.Literal)
     assert tp.o.lex == s
+
+
+def test_prefixed_names_take_the_sparql_character_classes():
+    """PN_PREFIX / PN_LOCAL take SPARQL 1.1's PN_CHARS_BASE and PN_CHARS
+    (§19.8), so non-ASCII prefixes, local parts and variable names
+    parse; a local part never ends in ``.``, ``%HH`` and ``\\``-escapes
+    are local characters, and a character outside the classes (× is
+    U+00D7, which PN_CHARS_BASE skips) is still rejected."""
+    import pytest
+
+    from sparkdon.errors import SparqlSyntaxError
+
+    def values(text):
+        q = Parser("PREFIX : <http://e/>\nPREFIX größe: <http://g/>\n"
+                   + text).parse_query()
+        return [row[0] for row in q.where.elements[0].rows]
+
+    assert values("SELECT ?x { VALUES ?x { :Zürich } }") == [
+        terms.IRI("http://e/Zürich")]
+    assert values("SELECT ?x { VALUES ?x { größe:東京 größe:a·b‿c } }") == [
+        terms.IRI("http://g/東京"), terms.IRI("http://g/a·b‿c")]
+    assert values("SELECT ?x { VALUES ?x { :a.b :c%20d :e\\-f :1:2 } }") == [
+        terms.IRI("http://e/a.b"), terms.IRI("http://e/c%20d"),
+        terms.IRI("http://e/e-f"), terms.IRI("http://e/1:2")]
+    q = Parser("SELECT ?straße { ?straße ?p ?o }").parse_query()
+    assert q.projections[0][0].name == "straße"
+    assert [t.text for t in tokenize(":a.")] == [":a", ".", ""]
+    for bad in (":a×b", "?straße×", ":a%2"):
+        with pytest.raises(SparqlSyntaxError, match="unexpected character"):
+            tokenize(bad)
