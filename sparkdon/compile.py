@@ -1671,6 +1671,14 @@ class Compiler:
             return col.cast("double")
         raise QueryExecutionError(f"cannot coerce {kind} to number")
 
+    def num_operand(self, val) -> Column:
+        """A numeric function or operator argument: ``as_num``, except
+        that a boolean is a SPARQL type error (NULL) — ``as_num`` keeps
+        booleans numeric because ``<``/``>`` order them."""
+        if val[0] == "bool":
+            return F.lit(None).cast("double")
+        return self.as_num(val)
+
     def as_str(self, val) -> Column:
         kind, col = val[0], val[1]
         if kind == "str":
@@ -1780,7 +1788,7 @@ class Compiler:
         if op == "!":
             return ("bool", ~self.as_bool(self.compile_expr(expr.args[0], colmap)))
         if op == "neg":
-            return ("num", -self.as_num(self.compile_expr(expr.args[0], colmap)))
+            return ("num", -self.num_operand(self.compile_expr(expr.args[0], colmap)))
         a = self.compile_expr(expr.args[0], colmap)
         b = self.compile_expr(expr.args[1], colmap)
         if op in ("=", "!="):
@@ -1802,7 +1810,7 @@ class Compiler:
                     .when(str_ok | temp_ok, str_cmp)
                     .otherwise(F.lit(None).cast("boolean")))
         if op in ("+", "-", "*", "/"):
-            na, nb = self.as_num(a), self.as_num(b)
+            na, nb = self.num_operand(a), self.num_operand(b)
             # try_divide: division by zero is a SPARQL error (unbound),
             # not a failed query
             col = {"+": na + nb, "-": na - nb, "*": na * nb,
@@ -1833,7 +1841,7 @@ class Compiler:
         if name == "ISLITERAL":
             return ("bool", args[0][1]["kind"] == KIND_LIT)
         if name == "ISNUMERIC":
-            return ("bool", self.as_num(args[0]).isNotNull())
+            return ("bool", self.num_operand(args[0]).isNotNull())
         if name == "SAMETERM":
             return ("bool", args[0][1].eqNullSafe(args[1][1]))
         if name in ("IRI", "URI"):
@@ -1885,13 +1893,13 @@ class Compiler:
             return ("bool", F.when(rng == "*", lang != "")
                     .otherwise(F.lower(lang) == F.lower(rng)))
         if name == "ABS":
-            return ("num", F.abs(self.as_num(args[0])))
+            return ("num", F.abs(self.num_operand(args[0])))
         if name == "CEIL":
-            return ("num", F.ceil(self.as_num(args[0])).cast("double"), "integer")
+            return ("num", F.ceil(self.num_operand(args[0])).cast("double"), "integer")
         if name == "FLOOR":
-            return ("num", F.floor(self.as_num(args[0])).cast("double"), "integer")
+            return ("num", F.floor(self.num_operand(args[0])).cast("double"), "integer")
         if name == "ROUND":
-            return ("num", F.round(self.as_num(args[0]), 0))
+            return ("num", F.round(self.num_operand(args[0]), 0))
         if name == "YEAR":
             return ("num", F.year(F.try_to_timestamp(self.as_str(args[0]))).cast("double"), "integer")
         if name == "MONTH":
@@ -2280,7 +2288,7 @@ class Compiler:
                 return make_term(KIND_LIT, c.cast("string"), F.lit(XSD + "integer"))
             val = self.compile_expr(agg.arg, colmap)
             if agg.name in ("SUM", "AVG"):
-                num = self.as_num(val)
+                num = self.num_operand(val)
                 if agg.name == "SUM":
                     num = F.sum_distinct(num) if agg.distinct else F.sum(num)
                 elif agg.distinct:
@@ -2289,7 +2297,14 @@ class Compiler:
                 else:
                     num = F.avg(num)
                 lex = F.regexp_replace(num.cast("string"), r"\.0$", "")
-                return make_term(KIND_LIT, lex, F.lit(XSD + "double"))
+                # §18.5.1.3/4: the SUM and AVG of no solutions are
+                # "0"^^xsd:integer; a group without a numeric value has
+                # none (a type error: unbound)
+                return (F.when(F.count(F.lit(1)) == 0,
+                               make_term(KIND_LIT, F.lit("0"),
+                                         F.lit(XSD + "integer")))
+                        .when(num.isNotNull(),
+                              make_term(KIND_LIT, lex, F.lit(XSD + "double"))))
             if agg.name in ("MIN", "MAX"):
                 term = self.as_term(val)
                 fn = F.min_by if agg.name == "MIN" else F.max_by

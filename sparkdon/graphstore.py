@@ -39,6 +39,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from sparkdon import io as io_mod
 from sparkdon.protocol import GRAPH_TYPES, negotiate
+from sparkdon.sparql_client import auth_headers
 
 #: payload media types accepted for PUT/POST bodies
 _PARSE_TYPES = ("text/turtle", "application/n-triples", "text/plain",
@@ -256,13 +257,7 @@ class RemoteGraphStore:
             self._gurl(graph), data=body, method=method,
             headers={"Accept": "application/n-triples", **(
                 {"Content-Type": "application/n-triples"} if body is not None
-                else {})})
-        if self.user is not None:
-            import base64
-
-            cred = base64.b64encode(
-                f"{self.user}:{self.passwd or ''}".encode()).decode()
-            req.add_header("Authorization", f"Basic {cred}")
+                else {}), **auth_headers(self.user, self.passwd)})
         return urllib.request.urlopen(req, timeout=self.timeout)
 
     def get(self, graph=None):

@@ -1,30 +1,25 @@
 """Remote SPARQL-protocol source (S3) — reference ``RemoteEndpoint``
 (gastrodon/__init__.py:633-775).
 
-The reference wraps SPARQLWrapper; that library is not available here, so
-the SPARQL protocol is spoken directly over urllib (public HTTP standard:
-GET/POST with ``application/sparql-results+json``).  JSON term decoding
-mirrors ``_jsonToNode`` (gastrodon/__init__.py:651-662).
+The reference wraps SPARQLWrapper; here every request goes through the
+one stdlib client, :mod:`sparkdon.sparql_client` (``fetch_bindings`` for
+queries, ``post_update`` for updates).  JSON term decoding mirrors
+``_jsonToNode`` (gastrodon/__init__.py:651-662).
 
-Two consumption modes:
+Two ways to read a query's results:
 
 - ``select()`` — driver-side fetch → pandas (the reference's UX; results
   are interactively sized).
-- ``to_spark(sparql, partitions=N)`` — scale path: the result set is
-  fetched by executors in LIMIT/OFFSET slices inside ``mapInPandas``
-  (each task issues its own HTTP request), yielding a distributed
-  bindings DataFrame without the driver ever holding the full result.
-  OFFSET pagination requires a stable ordering — callers should include
-  ORDER BY for strict exactly-once semantics; most stores paginate
-  deterministically for a fixed query.
+- ``to_spark(sparql, partitions=N)`` — scale path: a
+  ``spark.read.format("sparql")`` over this endpoint
+  (:mod:`sparkdon.sources.sparql_source`).  Executors page through
+  ORDER BY'd LIMIT/OFFSET stripes of the query wrapped as a subselect,
+  so the driver never holds the full result.
 """
 
 from __future__ import annotations
 
-import json
 import re
-import urllib.parse
-import urllib.request
 from typing import Any
 
 import pandas as pd
@@ -32,129 +27,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sparkdon.errors import QueryExecutionError
 from sparkdon.session import Endpoint, QName, _normalize_column_type
-from sparkdon.terms import BNode, IRI, to_python
+# fetch_bindings and _parse_xml_results are looked up here by SERVICE
+# (compile.py) and by callers that patch or import them from this module
+from sparkdon.sparql_client import (  # noqa: F401
+    _parse_xml_results, fetch_bindings, post_update)
+from sparkdon.terms import (
+    KIND_BNODE, KIND_IRI, KIND_LIT, XSD, BNode, to_python)
 
-
-def _decode_json_term(node: dict | None) -> Any:
-    """SPARQL-JSON term → Python value (mirrors _jsonToNode's switch on
-    'uri' / 'typed-literal' / 'literal' / 'bnode')."""
-    if node is None:
-        return None
-    t = node.get("type")
-    if t == "uri":
-        return IRI(node["value"])
-    if t == "bnode":
-        return BNode(node["value"])
-    # 'literal' and 'typed-literal'
-    return to_python("lit", node["value"], node.get("datatype"), node.get("xml:lang"))
-
-
-def _dataset_params(default_graph, named_graphs) -> list:
-    """Protocol dataset parameters (SPARQL 1.1 Protocol §2.1.4) as
-    repeatable (name, value) pairs.  ``default_graph`` accepts a single
-    IRI (reference parity: gastrodon's RemoteEndpoint default_graph) or
-    a list; ``named_graphs`` a list."""
-    if default_graph is None:
-        dgs = []
-    elif isinstance(default_graph, (list, tuple)):
-        dgs = list(default_graph)
-    else:
-        dgs = [default_graph]
-    return ([("default-graph-uri", str(g)) for g in dgs]
-            + [("named-graph-uri", str(g)) for g in (named_graphs or [])])
-
-
-_XRNS = "{http://www.w3.org/2005/sparql-results#}"
-
-
-def _parse_xml_results(text: str | bytes) -> dict:
-    """SPARQL Query Results XML Format → the JSON-results dict shape
-    (fetch_bindings' output contract) — the fallback for endpoints that
-    serve only ``application/sparql-results+xml``."""
-    import xml.etree.ElementTree as ET
-
-    root = ET.fromstring(text)
-    boolean = root.find(_XRNS + "boolean")
-    if boolean is not None:
-        return {"head": {}, "boolean": (boolean.text or "").strip() == "true"}
-    head = [v.get("name")
-            for v in root.findall(f"{_XRNS}head/{_XRNS}variable")]
-    bindings = []
-    for res in root.findall(f"{_XRNS}results/{_XRNS}result"):
-        b = {}
-        for bind in res.findall(_XRNS + "binding"):
-            for child in bind:
-                tag = child.tag[len(_XRNS):]
-                if tag == "uri":
-                    node = {"type": "uri", "value": child.text or ""}
-                elif tag == "bnode":
-                    node = {"type": "bnode", "value": child.text or ""}
-                else:
-                    node = {"type": "literal",
-                            "value": "".join(child.itertext())}
-                    lang = child.get(
-                        "{http://www.w3.org/XML/1998/namespace}lang")
-                    dt = child.get("datatype")
-                    if lang:
-                        node["xml:lang"] = lang
-                    elif dt:
-                        node["datatype"] = dt
-                b[bind.get("name")] = node
-        bindings.append(b)
-    return {"head": {"vars": head}, "results": {"bindings": bindings}}
-
-
-def fetch_bindings(url: str, sparql: str, default_graph=None,
-                   user: str | None = None, passwd: str | None = None,
-                   timeout: int = 60, raw_post: bool = False,
-                   named_graphs=None) -> dict:
-    """One SPARQL-protocol request → parsed JSON results document.
-
-    ``raw_post=True`` uses the §2.1.3 direct-POST form (body is the bare
-    query, ``Content-Type: application/sparql-query``, protocol params on
-    the URL) instead of form encoding — the right choice for very large
-    queries, where percent-encoding inflates the body."""
-    ds = _dataset_params(default_graph, named_graphs)
-    if raw_post:
-        if ds:
-            url += ("&" if "?" in url else "?") + urllib.parse.urlencode(ds)
-        data = sparql.encode()
-        ctype = "application/sparql-query; charset=UTF-8"
-    else:
-        data = urllib.parse.urlencode([("query", sparql)] + ds).encode()
-        ctype = "application/x-www-form-urlencoded"
-    req = urllib.request.Request(
-        url,
-        data=data,
-        headers={
-            # JSON preferred; XML accepted for endpoints that only
-            # serve the XML results format (parsed to the same shape)
-            "Accept": "application/sparql-results+json, "
-                      "application/sparql-results+xml;q=0.9",
-            "Content-Type": ctype,
-        },
-    )
-    if user is not None:
-        import base64
-
-        cred = base64.b64encode(f"{user}:{passwd or ''}".encode()).decode()
-        req.add_header("Authorization", f"Basic {cred}")
-    try:
-        with urllib.request.urlopen(req, timeout=timeout) as resp:
-            body = resp.read()
-            rtype = (resp.headers.get("Content-Type") or "") \
-                .split(";", 1)[0].strip().lower()
-            if rtype in ("application/sparql-results+xml",
-                         "application/xml", "text/xml"):
-                return _parse_xml_results(body)
-            return json.loads(body.decode())
-    except urllib.error.HTTPError as e:  # friendly error (gastrodon:570-579)
-        body = e.read().decode(errors="replace")[:2000]
-        raise QueryExecutionError(
-            f"remote endpoint returned HTTP {e.code}: {body}", sparql) from None
-    except urllib.error.URLError as e:
-        raise QueryExecutionError(
-            f"cannot reach remote endpoint {url}: {e.reason}", sparql) from None
+#: SPARQL-JSON term type → triple-table kind (literals are the rest)
+_JSON_KINDS = {"uri": KIND_IRI, "bnode": KIND_BNODE}
 
 
 class RemoteEndpoint(Endpoint):
@@ -187,22 +68,36 @@ class RemoteEndpoint(Endpoint):
 
     def select(self, sparql: str, bindings: dict | None = None) -> pd.DataFrame:
         sparql = self._prepare(sparql, bindings, depth=3)
-        sparql = self._inject_prefixes(sparql)
-        doc = fetch_bindings(self.url, sparql, self.default_graph,
-                             self.user, self.passwd,
-                             named_graphs=self.named_graphs)
+        doc = self._fetch(self._inject_prefixes(sparql))
         variables = doc["head"]["vars"]
-        cols: dict[str, list] = {v: [] for v in variables}
-        for row in doc["results"]["bindings"]:
-            for v in variables:
-                value = _decode_json_term(row.get(v))  # missing key -> None
-                if isinstance(value, IRI):
-                    value = QName(self.short_name(str(value)), str(value))
-                cols[v].append(value)
+        cols = {v: [self._decode(row.get(v))  # missing key -> None
+                    for row in doc["results"]["bindings"]]
+                for v in variables}
         pdf = pd.DataFrame(cols, columns=variables)
         for c in pdf.columns:
             pdf[c] = _normalize_column_type(pdf[c])
         return pdf
+
+    def _fetch(self, sparql: str) -> dict:
+        """One protocol query with this endpoint's dataset and credentials."""
+        return fetch_bindings(self.url, sparql, self.default_graph,
+                              self.user, self.passwd,
+                              named_graphs=self.named_graphs)
+
+    def _decode(self, node: dict | None) -> Any:
+        """SPARQL-JSON term → Python value, IRIs shortened to QNames
+        (mirrors _jsonToNode's switch on 'uri' / 'typed-literal' /
+        'literal' / 'bnode')."""
+        if node is None:
+            return None
+        t = node.get("type")
+        if t == "uri":
+            return QName(self.short_name(node["value"]), node["value"])
+        if t == "bnode":
+            return BNode(node["value"])
+        # 'literal' and 'typed-literal'
+        return to_python("lit", node["value"], node.get("datatype"),
+                         node.get("xml:lang"))
 
     def _inject_prefixes(self, sparql: str) -> str:
         """Prepend only prefixes that occur in the text and aren't already
@@ -222,75 +117,44 @@ class RemoteEndpoint(Endpoint):
             lines.append(f"BASE <{self.base_uri}>")
         return ("\n".join(lines) + "\n" + sparql) if lines else sparql
 
-    # -- scale path: partitioned fetch into a Spark DataFrame ----------
+    # -- scale path: the sparql data source -----------------------------
 
     def to_spark(self, sparql: str, partitions: int = 8,
                  page_size: int = 10_000, max_pages_per_task: int = 1000) -> DataFrame:
-        """Distributed fetch: each task pages through its LIMIT/OFFSET
-        stripes until a short page signals the end.  All columns come back
-        as strings (lexical forms) — cast downstream as needed."""
+        """Distributed fetch through ``spark.read.format("sparql")``
+        (registered with the session on first use): each of
+        ``partitions`` tasks pages through its LIMIT/OFFSET stripes of
+        ``page_size`` rows, at most ``max_pages_per_task`` pages, until a
+        short page signals the end.  All columns come back as strings
+        (lexical forms) — cast downstream as needed.  Executors import
+        the source and :mod:`sparkdon.sparql_client`, so they need
+        sparkdon installed."""
         if self.spark is None:
             raise QueryExecutionError("to_spark requires a SparkSession")
-        sparql = self._inject_prefixes(sparql)
-        url, dg, user, passwd = self.url, self.default_graph, self.user, self.passwd
-        ds_pairs = _dataset_params(dg, self.named_graphs)
+        from sparkdon.sources.sparql_source import SparqlDataSource
 
-        probe = fetch_bindings(url, sparql + " LIMIT 1", dg, user, passwd,
-                               named_graphs=self.named_graphs)
-        variables = probe["head"]["vars"]
-        if not variables:
-            raise QueryExecutionError("query projects no variables", sparql)
-
-        # The stripe fetcher must be fully self-contained (stdlib-only
-        # imports INSIDE the closure): cloudpickle then serializes it by
-        # value, so executors need neither sparkdon on their PYTHONPATH
-        # nor --py-files.  Referencing module-level helpers here would
-        # serialize by reference and fail on workers without the package.
-        def fetch_stripe(batches):
-            import json as _json
-            import urllib.parse as _up
-            import urllib.request as _ur
-
-            import pandas as _pd
-
-            def _fetch(q):
-                params = [("query", q)] + list(ds_pairs)
-                req = _ur.Request(
-                    url,
-                    data=_up.urlencode(params).encode(),
-                    headers={
-                        "Accept": "application/sparql-results+json",
-                        "Content-Type": "application/x-www-form-urlencoded",
-                    },
-                )
-                if user is not None:
-                    import base64 as _b64
-
-                    cred = _b64.b64encode(f"{user}:{passwd or ''}".encode()).decode()
-                    req.add_header("Authorization", f"Basic {cred}")
-                with _ur.urlopen(req, timeout=60) as resp:
-                    return _json.loads(resp.read().decode())
-
-            for pdf in batches:
-                for pid in pdf["id"]:
-                    page = 0
-                    while page < max_pages_per_task:
-                        offset = (pid + page * partitions) * page_size
-                        doc = _fetch(f"{sparql} LIMIT {page_size} OFFSET {offset}")
-                        rows = doc["results"]["bindings"]
-                        if rows:
-                            out = {
-                                v: [r.get(v, {}).get("value") for r in rows]
-                                for v in variables
-                            }
-                            yield _pd.DataFrame(out)
-                        if len(rows) < page_size:
-                            break
-                        page += 1
-
-        ids = self.spark.range(partitions).select("id")
-        schema = ", ".join(f"`{v}` string" for v in variables)
-        return ids.mapInPandas(fetch_stripe, schema)
+        if not (self.spark._jsparkSession.sessionState().dataSourceManager()
+                .dataSourceExists(SparqlDataSource.name())):
+            self.spark.dataSource.register(SparqlDataSource)
+        # the reader implements pushFilters, which Spark refuses to plan
+        # unless Python filter pushdown is on
+        self.spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+        dg = self.default_graph
+        if isinstance(dg, (list, tuple)):
+            dg = " ".join(map(str, dg))
+        reader = (self.spark.read.format(SparqlDataSource.name())
+                  .option("url", self.url)
+                  .option("query", self._inject_prefixes(sparql))
+                  .option("partitions", partitions)
+                  .option("pagesize", page_size)
+                  .option("maxpagespertask", max_pages_per_task))
+        for key, value in (("user", self.user), ("password", self.passwd),
+                           ("default-graph-uri", dg),
+                           ("named-graph-uri",
+                            " ".join(map(str, self.named_graphs or ())))):
+            if value:
+                reader = reader.option(key, str(value))
+        return reader.load()
 
     # -- construct / update --------------------------------------------
 
@@ -304,9 +168,7 @@ class RemoteEndpoint(Endpoint):
             raise QueryExecutionError("remote construct requires a SparkSession")
         sparql = self._prepare(sparql, bindings, depth=3)
         sparql = self._inject_prefixes(sparql)
-        doc = fetch_bindings(self.url, sparql, self.default_graph,
-                             self.user, self.passwd,
-                             named_graphs=self.named_graphs)
+        doc = self._fetch(sparql)
         variables = doc["head"]["vars"]
         missing = [v for v in ("s", "p", "o") if v not in variables]
         if missing:
@@ -315,30 +177,11 @@ class RemoteEndpoint(Endpoint):
 
         from sparkdon.io import triples_df
         from sparkdon.session import LocalEndpoint
-        from sparkdon.terms import KIND_BNODE, KIND_IRI, KIND_LIT, XSD
 
-        def term_kind(node: dict) -> str:
-            t = node.get("type")
-            if t == "uri":
-                return KIND_IRI
-            if t == "bnode":
-                return KIND_BNODE
-            return KIND_LIT
-
-        rows = []
-        for row in doc["results"]["bindings"]:
-            s, p, o = row.get("s"), row.get("p"), row.get("o")
-            if s is None or p is None or o is None:
-                continue  # incomplete solution constructs no triple
-            o_kind = term_kind(o)
-            o_dt = o.get("datatype") if o_kind == KIND_LIT else None
-            o_lang = o.get("xml:lang") if o_kind == KIND_LIT else None
-            if o_kind == KIND_LIT and o_dt == XSD + "string":
-                o_dt = None  # simple-literal normalization (matches io._encode)
-            rows.append((
-                term_kind(s), s["value"], p["value"],
-                o_kind, o["value"], o_dt, o_lang,
-            ))
+        # an incomplete solution constructs no triple
+        rows = [self._json_triple_row(r["s"], r["p"], r["o"])
+                for r in doc["results"]["bindings"]
+                if all(r.get(v) is not None for v in ("s", "p", "o"))]
         return LocalEndpoint(self.spark, triples_df(self.spark, rows),
                              prefixes=dict(self.prefixes),
                              base_uri=self.base_uri)
@@ -348,15 +191,8 @@ class RemoteEndpoint(Endpoint):
     @staticmethod
     def _json_triple_row(s: dict, p: dict, o: dict):
         """Three SPARQL-JSON terms → one flat triple-table row."""
-        from sparkdon.terms import KIND_BNODE, KIND_IRI, KIND_LIT, XSD
-
         def kind(node: dict) -> str:
-            t = node.get("type")
-            if t == "uri":
-                return KIND_IRI
-            if t == "bnode":
-                return KIND_BNODE
-            return KIND_LIT
+            return _JSON_KINDS.get(node.get("type"), KIND_LIT)
 
         o_kind = kind(o)
         o_dt = o.get("datatype") if o_kind == KIND_LIT else None
@@ -391,7 +227,6 @@ class RemoteEndpoint(Endpoint):
         """
         from sparkdon.io import triples_df
         from sparkdon.session import LocalEndpoint
-        from sparkdon.terms import KIND_BNODE
         from sparkdon.uris import ns_part
 
         if self.spark is None:
@@ -400,10 +235,7 @@ class RemoteEndpoint(Endpoint):
         rows: set[tuple] = set()
 
         def fetch(sparql: str) -> list[dict]:
-            doc = fetch_bindings(self.url, sparql, self.default_graph,
-                                 self.user, self.passwd,
-                                 named_graphs=self.named_graphs)
-            return doc["results"]["bindings"]
+            return self._fetch(sparql)["results"]["bindings"]
 
         if strategy == "virtuoso":
             root = f"<{node}>" if not isinstance(node, BNode) \
@@ -482,15 +314,11 @@ class RemoteEndpoint(Endpoint):
         import collections
 
         from sparkdon.terms import RDF
-        from sparkdon.session import QName as _QName
 
         node = self._resolve_node(node)
         ref = self._bnode_to_sparql(node) if isinstance(node, BNode) \
             else f"<{node}>"
-        doc = fetch_bindings(
-            self.url, f"SELECT ?p ?o {{ {ref} ?p ?o }}",
-            self.default_graph, self.user, self.passwd,
-            named_graphs=self.named_graphs)
+        doc = self._fetch(f"SELECT ?p ?o {{ {ref} ?p ?o }}")
         types: set[str] = set()
         members: list[tuple[int, Any]] = []
         for b in doc["results"]["bindings"]:
@@ -502,10 +330,7 @@ class RemoteEndpoint(Endpoint):
                     idx = int(p[len(RDF) + 1:])
                 except ValueError:
                     continue
-                value = _decode_json_term(b["o"])
-                if isinstance(value, IRI):
-                    value = _QName(self.short_name(str(value)), str(value))
-                members.append((idx, value))
+                members.append((idx, self._decode(b["o"])))
         if RDF + "Bag" in types:
             return collections.Counter(v for _, v in members)
         return [v for _, v in sorted(members, key=lambda t: t[0])]
@@ -521,13 +346,5 @@ class RemoteEndpoint(Endpoint):
 
     def update(self, sparql: str, bindings: dict | None = None) -> None:
         sparql = self._prepare(sparql, bindings, depth=3)
-        sparql = self._inject_prefixes(sparql)
-        data = urllib.parse.urlencode({"update": sparql}).encode()
-        req = urllib.request.Request(
-            self.url, data=data,
-            headers={"Content-Type": "application/x-www-form-urlencoded"})
-        try:
-            urllib.request.urlopen(req, timeout=60).read()
-        except urllib.error.HTTPError as e:
-            raise QueryExecutionError(
-                f"remote update failed: HTTP {e.code}", sparql) from None
+        post_update(self.url, self._inject_prefixes(sparql),
+                    self.user, self.passwd)

@@ -1,8 +1,12 @@
 """``spark.read.format("sparql")`` — a Python Data Source (Spark 4 API)
-over the SPARQL protocol, the DataSourceV2-style successor to
-``RemoteEndpoint.to_spark`` (SURVEY.md §4.2 item 5).
+over the SPARQL protocol (SURVEY.md §4.2 item 5), and the reader behind
+``RemoteEndpoint.to_spark``.  Every request — the driver's schema probe
+and each executor page — goes through
+:func:`sparkdon.sparql_client.fetch_bindings`, so the source gets its
+credentials, dataset params, XML-results fallback and error mapping;
+executors therefore need sparkdon installed.
 
-Adds what the mapInPandas stripe fetcher cannot express:
+Beyond partitioned paging it offers:
 
 - **Filter pushdown** (``pushFilters``): Catalyst hands the reader the
   query's filters; the supported subset is translated into SPARQL
@@ -12,8 +16,8 @@ Adds what the mapInPandas stripe fetcher cannot express:
   (equality, IN, BOUND-ness, STRSTARTS/CONTAINS/STRENDS — all via
   ``STR(?var)``); everything else is left for Spark to re-apply.
 - **Partition planning** (``partitions``): one ``InputPartition`` per
-  LIMIT/OFFSET stripe family, fetched executor-side exactly like
-  ``to_spark`` (each task pages through its own stripes).
+  LIMIT/OFFSET stripe family, fetched executor-side (each task pages
+  through its own stripes).
 - **LIMIT re-emission** (``option("limit", n)``): the row cap rides
   into every remote request (``LIMIT min(pagesize, remaining)``), the
   fetch collapses to one sequential-paging partition, and at most n
@@ -36,7 +40,12 @@ All result columns are strings (lexical forms) — cast downstream.  The
 user query must be a plain SELECT; its own solution modifiers keep their
 meaning because the query is wrapped as a subselect.
 
-Usage (pushdown needs ``spark.sql.python.filterPushdown.enabled=true``)::
+Endpoint settings ride as options named after what they carry: ``user``
+and ``password`` (HTTP Basic credentials) and the protocol's
+``default-graph-uri`` / ``named-graph-uri`` (whitespace-separated IRIs).
+
+Usage (the reader implements ``pushFilters``, so Spark plans it only
+with ``spark.sql.python.filterPushdown.enabled=true``)::
 
     from sparkdon.sources.sparql_source import SparqlDataSource
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
@@ -70,6 +79,8 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 from pyspark.sql.types import StringType, StructField, StructType
+
+from sparkdon.sparql_client import fetch_bindings
 
 _PROLOGUE_RE = re.compile(r"(?im)^\s*(?:PREFIX\s+\S+\s+<[^>]*>|BASE\s+<[^>]*>)\s*")
 
@@ -123,23 +134,13 @@ def _filter_to_sparql(f: Filter) -> str | None:
     return None
 
 
-def _fetch_json(url: str, query: str, timeout: int = 60) -> dict:
-    """One protocol POST → parsed results document (stdlib only — runs
-    on executors)."""
-    import json
-    import urllib.parse
-    import urllib.request
-
-    req = urllib.request.Request(
-        url,
-        data=urllib.parse.urlencode({"query": query}).encode(),
-        headers={
-            "Accept": "application/sparql-results+json",
-            "Content-Type": "application/x-www-form-urlencoded",
-        },
-    )
-    with urllib.request.urlopen(req, timeout=timeout) as resp:
-        return json.loads(resp.read().decode())
+def _fetch(options: dict, query: str) -> dict:
+    """One protocol query with the source's endpoint settings."""
+    return fetch_bindings(
+        options["url"], query,
+        default_graph=options.get("default-graph-uri", "").split(),
+        named_graphs=options.get("named-graph-uri", "").split(),
+        user=options.get("user"), passwd=options.get("password"))
 
 
 class SparqlDataSource(DataSource):
@@ -150,7 +151,6 @@ class SparqlDataSource(DataSource):
         return "sparql"
 
     def schema(self) -> StructType:
-        url = self.options["url"]
         query = self.options["query"]
         # An aggregate rewrite fixes the projection without a probe:
         # groupby vars + the aggregate alias.
@@ -166,7 +166,8 @@ class SparqlDataSource(DataSource):
         # " LIMIT 1" suffix would be a syntax error when the user query
         # already ends in its own LIMIT/OFFSET (which the docstring allows).
         prologue, body = _split_prologue(query)
-        doc = _fetch_json(url, f"{prologue}SELECT * WHERE {{ {{ {body} }} }} LIMIT 1")
+        doc = _fetch(self.options,
+                     f"{prologue}SELECT * WHERE {{ {{ {body} }} }} LIMIT 1")
         return StructType(
             [StructField(v, StringType()) for v in doc["head"]["vars"]]
         )
@@ -177,7 +178,7 @@ class SparqlDataSource(DataSource):
 
 class SparqlReader(DataSourceReader):
     def __init__(self, options: dict, schema: StructType):
-        self.url = options["url"]
+        self.options = options
         self.query = options["query"]
         self.n_partitions = int(options.get("partitions", "4"))
         self.page_size = int(options.get("pagesize", "10000"))
@@ -263,8 +264,8 @@ class SparqlReader(DataSourceReader):
                 if offset >= self.limit:
                     return
                 size = min(size, self.limit - offset)
-            doc = _fetch_json(
-                self.url, f"{query} LIMIT {size} OFFSET {offset}")
+            doc = _fetch(self.options,
+                         f"{query} LIMIT {size} OFFSET {offset}")
             rows = doc["results"]["bindings"]
             for r in rows:
                 yield tuple(

@@ -1000,6 +1000,57 @@ def test_plain_strings_are_not_numbers(spark):
                     "FILTER(!BOUND(?q)) }")["q"].tolist() == [None]
 
 
+def test_booleans_are_not_numbers(spark):
+    """xsd:boolean is no numeric type: arithmetic and numeric functions
+    on a comparison's result are SPARQL type errors that leave the BIND
+    unbound (``(?n < 7) + 1`` bound 2), and ``ISNUMERIC`` of a boolean
+    is false; booleans still order under ``<``."""
+    e = inline('@prefix : <http://example.com/> . :a :n 6 .', spark)
+
+    def bound(expr):
+        rows = e.select_raw(
+            f"SELECT ?q {{ :a :n ?n BIND({expr} AS ?q) }}").collect()
+        assert len(rows) == 1
+        return None if rows[0].v_q is None else rows[0].v_q.lex
+
+    for expr in ("(?n < 7) + 1", "1 * (?n < 7)", "-(?n < 7)",
+                 "(?n < 7) / 1", "ABS(?n < 7)", "ROUND(?n > 7)"):
+        assert bound(expr) is None, expr
+    assert bound("ISNUMERIC(?n < 7)") == "false"
+    assert bound("ISNUMERIC(?n)") == "true"
+    assert bound("(?n > 7) < (?n < 7)") == "true"
+
+
+def test_sum_and_avg_follow_the_spec_on_empty_and_non_numeric_groups(spark):
+    """SUM/AVG over no solutions are "0"^^xsd:integer (SPARQL 1.1
+    §18.5.1.3/§18.5.1.4); a group with no numeric value leaves the
+    result unbound (the engine built a literal with no lexical form,
+    which select() failed to decode)."""
+    e = inline('@prefix : <http://example.com/> . '
+               ':a :m :b . :a :n 6 , 4 .', spark)
+
+    def answer(q):
+        return [tuple(r) for r in e.select(q).itertuples(index=False)]
+
+    for agg in ("SUM", "AVG"):
+        assert answer(f"SELECT ({agg}(?x) AS ?s) {{ :a :m ?x }}") == [(None,)]
+        assert answer(f"SELECT ({agg}(?x) AS ?s) {{ :a :nothing ?x }}") == [(0,)]
+        raw = e.select_raw(
+            f"SELECT ({agg}(?x) AS ?s) {{ :a :nothing ?x }}").collect()
+        assert [(r.v_s.lex, r.v_s.dt) for r in raw] == [
+            ("0", "http://www.w3.org/2001/XMLSchema#integer")]
+    assert answer("SELECT (SUM(?x) AS ?s) { :a :n ?x }") == [(10.0,)]
+    assert answer("SELECT (SUM(?x < 5) AS ?s) { :a :n ?x }") == [(None,)]
+    assert answer("SELECT (AVG(?x) AS ?s) { :a :n ?x }") == [(5.0,)]
+    rows = e.select_raw("SELECT ?p (SUM(?x) AS ?s) { :a ?p ?x } "
+                        "GROUP BY ?p").collect()
+    assert sorted((r.v_p.lex, r.v_s and r.v_s.lex) for r in rows) == [
+        ("http://example.com/m", None), ("http://example.com/n", "10")]
+    # a grouped query over no solutions has no groups at all
+    assert answer("SELECT ?p (SUM(?x) AS ?s) { :a :nothing ?x ; ?p ?x } "
+                  "GROUP BY ?p") == []
+
+
 def test_values_take_non_ascii_prefixed_names(spark):
     e = inline('@prefix : <http://example.com/> . :Zürich :in :Schweiz .',
                spark)

@@ -554,12 +554,9 @@ def test_parse_xml_results_roundtrip(spark):
         map(key, jdoc["results"]["bindings"]))
 
 
-def test_fetch_bindings_from_xml_only_endpoint(spark):
-    # an endpoint that ignores Accept and serves only XML results
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-    from sparkdon.remote import fetch_bindings
+class XmlOnlyHandler(BaseHTTPRequestHandler):
+    """An endpoint that ignores Accept and serves only XML results: one
+    ?x = 42 solution, whatever the query."""
 
     XML = ('<?xml version="1.0"?>'
            '<sparql xmlns="http://www.w3.org/2005/sparql-results#">'
@@ -569,21 +566,27 @@ def test_fetch_bindings_from_xml_only_endpoint(spark):
            '42</literal></binding></result>'
            '</results></sparql>')
 
-    class H(BaseHTTPRequestHandler):
-        def do_POST(self):
-            self.rfile.read(int(self.headers.get("Content-Length", 0)))
-            body = XML.encode()
-            self.send_response(200)
-            self.send_header("Content-Type",
-                             "application/sparql-results+xml")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+    def do_POST(self):
+        self.rfile.read(int(self.headers.get("Content-Length", 0)))
+        body = self.XML.encode()
+        self.send_response(200)
+        self.send_header("Content-Type",
+                         "application/sparql-results+xml")
+        self.send_header("Content-Length", str(len(body)))
+        self.end_headers()
+        self.wfile.write(body)
 
-        def log_message(self, *a):
-            pass
+    def log_message(self, *a):
+        pass
 
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), H)
+
+def test_fetch_bindings_from_xml_only_endpoint(spark):
+    # an endpoint that ignores Accept and serves only XML results
+    from http.server import ThreadingHTTPServer
+
+    from sparkdon.remote import fetch_bindings
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), XmlOnlyHandler)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     try:
         url = f"http://127.0.0.1:{srv.server_address[1]}/sparql"
@@ -605,3 +608,183 @@ def test_parse_xml_ask_result():
         '"http://www.w3.org/2005/sparql-results#">'
         "<head/><boolean>true</boolean></sparql>")
     assert doc == {"head": {}, "boolean": True}
+
+
+# -- one protocol client ---------------------------------------------------
+
+def _serve(handler):
+    server = HTTPServer(("127.0.0.1", 0), handler)
+    server.queries = []
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    return server
+
+
+def _register_sparql_source(spark):
+    from sparkdon.sources.sparql_source import SparqlDataSource
+
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    spark.dataSource.register(SparqlDataSource)
+
+
+class AuthRecordingHandler(MockSparqlHandler):
+    def do_POST(self):
+        self.server.auth.append(self.headers.get("Authorization"))
+        super().do_POST()
+
+
+@pytest.fixture
+def auth_server():
+    server = _serve(AuthRecordingHandler)
+    server.auth = []
+    yield f"http://127.0.0.1:{server.server_port}/sparql", server
+    server.shutdown()
+    server.server_close()
+
+
+def test_remote_update_sends_credentials(auth_server):
+    import base64
+
+    from sparkdon.remote import RemoteEndpoint
+
+    url, server = auth_server
+    RemoteEndpoint(url, spark=None, user="u", passwd="p").update(
+        "INSERT DATA { <http://ex.com/a> <http://ex.com/p> 1 }")
+    assert server.queries[-1].startswith("INSERT DATA")
+    assert server.auth == ["Basic " + base64.b64encode(b"u:p").decode()]
+
+
+def test_remote_to_spark_sends_credentials(spark, auth_server):
+    """The data source carries the endpoint's credentials to the schema
+    probe and to every executor page."""
+    import base64
+
+    from sparkdon.remote import RemoteEndpoint
+
+    url, server = auth_server
+    df = RemoteEndpoint(url, spark, user="u", passwd="p").to_spark(
+        "SELECT ?s ?label ?n { ?s ?p ?o }", partitions=2, page_size=20)
+    assert len(df.collect()) == 30
+    assert len(server.auth) >= 3
+    assert set(server.auth) == {"Basic " + base64.b64encode(b"u:p").decode()}
+
+
+def test_remote_update_unreachable_is_query_execution_error():
+    import socket
+
+    from sparkdon.errors import QueryExecutionError
+    from sparkdon.remote import RemoteEndpoint
+
+    with socket.socket() as s:  # a port nobody listens on once closed
+        s.bind(("127.0.0.1", 0))
+        port = s.getsockname()[1]
+    e = RemoteEndpoint(f"http://127.0.0.1:{port}/sparql", spark=None)
+    with pytest.raises(QueryExecutionError, match="cannot reach"):
+        e.update("INSERT DATA { <http://ex.com/a> <http://ex.com/p> 1 }")
+
+
+def test_remote_to_spark_keeps_the_query_limit(spark):
+    """to_spark reads through the data source, whose schema probe and
+    stripes wrap the query as a subselect: a query with its own LIMIT
+    returns its rows (a " LIMIT 1" suffix probe made it a syntax
+    error, HTTP 400)."""
+    from sparkdon.protocol import SparqlProtocolServer
+    from sparkdon.remote import RemoteEndpoint
+    from sparkdon.session import inline
+
+    local = inline("@prefix : <http://example.com/> . "
+                   + " ".join(f":s{i} :p {i} ." for i in range(6)), spark)
+    with SparqlProtocolServer(local) as srv:
+        remote = RemoteEndpoint(srv.url, spark, prefixes=dict(local.prefixes))
+        df = remote.to_spark("SELECT ?s ?o { ?s :p ?o } ORDER BY ?o LIMIT 3",
+                             partitions=2, page_size=2)
+        assert [f.name for f in df.schema.fields] == ["s", "o"]
+        assert sorted((r["s"], r["o"]) for r in df.collect()) == [
+            ("http://example.com/s0", "0"), ("http://example.com/s1", "1"),
+            ("http://example.com/s2", "2")]
+
+
+def test_remote_to_spark_stripes_are_ordered(spark, mock_server):
+    """Every LIMIT/OFFSET stripe carries an ORDER BY, so the pages of
+    independent requests partition one deterministic sequence."""
+    from sparkdon.remote import RemoteEndpoint
+
+    url, server = mock_server
+    server.queries.clear()
+    df = RemoteEndpoint(url, spark=spark).to_spark(
+        "SELECT ?s ?label ?n { ?s ?p ?o }", partitions=3, page_size=7)
+    assert len(df.collect()) == 30
+    stripes = [q for q in server.queries if "OFFSET" in q]
+    assert len(stripes) >= 3
+    assert all("ORDER BY ?s ?label ?n" in q for q in stripes), stripes
+
+
+def test_sparql_datasource_reads_xml_only_endpoint(spark):
+    _register_sparql_source(spark)
+    server = _serve(XmlOnlyHandler)
+    try:
+        url = f"http://127.0.0.1:{server.server_port}/sparql"
+        df = (spark.read.format("sparql").option("url", url)
+              .option("query", "SELECT ?x WHERE { ?x ?p ?o }")
+              .option("partitions", "1").load())
+        assert [f.name for f in df.schema.fields] == ["x"]
+        assert [tuple(r) for r in df.collect()] == [("42",)]
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+def test_sparql_datasource_maps_http_errors(spark, mock_server):
+    """An endpoint failure surfaces as the client's QueryExecutionError
+    text, from the schema probe and from an executor read alike."""
+    _register_sparql_source(spark)
+    url, _ = mock_server
+    reader = (spark.read.format("sparql").option("url", url)
+              .option("query", "SELECT ?s { ?s ?p ?boom }"))
+    with pytest.raises(Exception, match="HTTP 500"):
+        reader.load()
+    with pytest.raises(Exception, match="HTTP 500"):
+        reader.schema("s string").load().collect()
+
+
+def test_only_the_client_module_speaks_http():
+    """urllib.request appears only in the SPARQL-protocol client, the
+    LOAD document fetch and the Graph Store client, and only the client
+    builds an Authorization header: a second protocol client cannot
+    creep back in."""
+    import ast
+    from pathlib import Path
+
+    import sparkdon
+
+    allowed = {"sparql_client.py": None, "session.py": "_apply_load",
+               "graphstore.py": "RemoteGraphStore"}
+    root = Path(sparkdon.__file__).parent
+    stray = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        inside = set()
+        scope = allowed.get(rel)
+        for node in ast.walk(tree):
+            if (isinstance(node, (ast.FunctionDef, ast.ClassDef))
+                    and node.name == scope):
+                inside.update(id(n) for n in ast.walk(node))
+        for node in ast.walk(tree):
+            uses_request = (
+                isinstance(node, ast.Import)
+                and any(a.name == "urllib.request" for a in node.names)
+                or isinstance(node, ast.ImportFrom)
+                and (node.module == "urllib.request"
+                     or node.module == "urllib"
+                     and any(a.name == "request" for a in node.names))
+                or isinstance(node, ast.Attribute) and node.attr == "request"
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "urllib")
+            builds_auth = (isinstance(node, ast.Constant)
+                           and node.value == "Authorization")
+            if builds_auth and rel != "sparql_client.py":
+                stray.append(f"{rel}:{node.lineno} Authorization")
+            if uses_request and not (
+                    rel in allowed and (scope is None or id(node) in inside)):
+                stray.append(f"{rel}:{node.lineno} urllib.request")
+    assert stray == []
